@@ -19,3 +19,8 @@ does not provide natively.
 """
 
 __version__ = "0.1.0"  # reference parity: utils/Version.java:27-44 (A4)
+
+from kafka_connect_oss_spark.shipping import install_on_python_worker
+
+# inert outside a PySpark Python worker and on CPython >= 3.13 (shipping.py)
+install_on_python_worker()

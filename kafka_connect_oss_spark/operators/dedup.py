@@ -860,11 +860,15 @@ def containment_pairs(docs: DataFrame, text_col: str = "text",
     surviving-shingle set (and a LogicalRDD's partitioning does not
     survive into the consumer under AQE anyway), so the groupBy paid
     its hash(_h) Exchange in BOTH forms. Unstaged, the count+semi+group
-    chain runs inline from the staged `posts` frame: identical exchange
-    count at sf0.1, one fewer materialization, and at deploy scale
+    chain runs inline from the staged `posts` frame: the same shuffles
+    run across all jobs, one fewer materialization, and at deploy scale
     (where the semi-join goes sort-merge) the groupBy reuses the join's
     hash(_h) partitioning directly — the exchange-free layout the
-    staging was supposed to buy.
+    staging was supposed to buy. The consumer plan's counted Exchanges
+    rise from 2 to 3, at sf0.001 and sf0.1 alike: the df-count Exchange
+    used to run in the staged job, hidden behind its LogicalRDD, and is
+    now inline (plan pin in tests/test_plan_guards.py, plan in
+    PLANS.md).
 
     Returns (id_a, id_b, containment) with id_a < id_b, containment
     rounded to 4 (identical double math in the DuckDB oracle).

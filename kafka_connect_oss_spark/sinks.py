@@ -170,8 +170,13 @@ def _promote_staged(spark: SparkSession, staging: str, out: str) -> list[str]:
         part_files = [
             f.getPath() for f in fs.listStatus(status.getPath())
             if not f.getPath().getName().startswith(("_", "."))]
-        # one file per group by construction (repartition on _file_id)
-        assert len(part_files) == 1, f"expected 1 file for {key}: {part_files}"
+        # one file per group by construction (repartition on _file_id);
+        # anything else means the staging dir was shared or left behind
+        if len(part_files) != 1:
+            names = sorted(p.getName() for p in part_files)
+            raise RuntimeError(
+                f"staged object {key!r} has {len(part_files)} part files "
+                f"under {status.getPath().toString()}, expected 1: {names}")
         dest = Path(posixpath.join(out, key))
         dest_parents.add(posixpath.dirname(posixpath.join(out, key)))
         renames.append((part_files[0], dest, key))

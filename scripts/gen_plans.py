@@ -164,11 +164,17 @@ SHOWCASE = {
         "exact inverted-shingle-index candidates — r10 bounded build: "
         "df count + LeftSemi pre-filter ahead of collect_list so an "
         "ultra-hot shingle costs a counter, never an aggregation "
-        "buffer (postings staged once for count/list subtrees); verify "
-        "join only on survivors, identity groups collapsed before "
-        "hashing — BIGINT hashes and ids on every exchange, text never "
-        "shuffles; rep-pair expansion + salted intra pairs reuse the "
-        "staged members frame (Scan ExistingRDD below both branches)"),
+        "buffer; the postings are staged once (Scan ExistingRDD) and "
+        "the count -> semi-join -> index chain runs inline from them "
+        "(unstaged since r17, 48afd53): the surviving-shingle set "
+        "broadcasts into the semi-join, so 3 shuffle Exchanges — df "
+        "count, index collect_list, candidate distinct — where the "
+        "staged form showed 2 and ran the count's Exchange in a "
+        "separate job; verify join only on survivors, identity groups "
+        "collapsed before hashing — BIGINT hashes and ids on every "
+        "exchange, text never shuffles; rep-pair expansion + salted "
+        "intra pairs reuse the staged members frame (Scan ExistingRDD "
+        "below both branches)"),
     "dedup_lsh_recall_eval": (
         "r09 recall monitor: truth = blocked exact tier (quadratic only "
         "within (lang,source)); caught decided by TWO id joins of the "
@@ -516,12 +522,13 @@ def main() -> None:
          "manifest is a map-side-combined n_shards-group aggregate")
     emit(DD.containment_pairs(load_table(spark, SF_DIR, "documents")),
          "dedup_containment_pairs (r11 single-pass rewrite)",
-         "the scan->shingle->distinct pipeline appears ONCE (staged via "
-         "localCheckpoint); the bounded index builds from the capped "
-         "postings staged AT the semi-join's hash(_h) partitioning "
-         "(groupBy reuses it exchange-free), candidates double-explode "
-         "from the index itself — no probe-side re-scan, no second "
-         "exchange of posting rows")
+         "the scan->shingle->distinct pipeline appears ONCE (staged "
+         "via localCheckpoint); the bounded index builds inline from "
+         "the staged postings — the df count and the index groupBy "
+         "each pay a hash(_h) Exchange (the semi-join broadcasts the "
+         "surviving shingles, so no partitioning is reused), "
+         "candidates double-explode from the index itself — no "
+         "probe-side re-scan")
     emit(R12.STAGED_QUERIES["corpus_drift_report"](spark, SF_DIR),
          "corpus_drift_report (staged r12 seat)",
          "two map-side-combined word-count aggregates, ONE full-outer "

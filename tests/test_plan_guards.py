@@ -149,7 +149,11 @@ PINS: dict[str, dict] = {
         "one_scan_of": ["orders"]},
     # dedup tiers — banded/blocked candidates, staged pipelines
     "dedup_minhash_lsh_pairs": {"max_exchanges": 1},
-    "dedup_containment_pairs": {"max_exchanges": 2},
+    # r17 (48afd53) unstaged the capped posting frame: the df-count
+    # Exchange that ran in the staged job is now inline (the cap's
+    # semi-join broadcasts, so the index groupBy pays its own), 2 -> 3;
+    # the count+index chain runs in one job instead of two (PLANS.md)
+    "dedup_containment_pairs": {"max_exchanges": 3},
     "dedup_lsh_recall_eval": {"max_exchanges": 3},
     "dedup_multi_signal": {"max_exchanges": 4},
     # r17 CC rewrite: the min-label loop runs over the rep-pair

@@ -168,3 +168,21 @@ def test_multi_topic_directory_layout(spark, tmp_path):
         assert all(k.split("/")[-1].startswith(t + "+") for k in tkeys)
     back = read_committed(spark, str(tmp_path), cfg, topic="audit")
     assert back.count() == 100
+
+
+def test_promote_rejects_two_part_files_for_one_key(spark, tmp_path):
+    # a staging dir holding two part files under one _file_id= cannot be
+    # promoted to one object; the error names the key and both files
+    from kafka_connect_oss_spark.sinks import STAGING_DIR, _promote_staged
+
+    key = "topics/events/partition=0/events+0+0000000000.json"
+    group = tmp_path / STAGING_DIR / f"_file_id={key.encode().hex()}"
+    group.mkdir(parents=True)
+    for name in ("part-00000.json", "part-00001.json"):
+        (group / name).write_text("{}\n")
+    with pytest.raises(RuntimeError, match="part files") as err:
+        _promote_staged(spark, str(tmp_path / STAGING_DIR), str(tmp_path))
+    msg = str(err.value)
+    assert key in msg
+    assert "part-00000.json" in msg and "part-00001.json" in msg
+    assert not (tmp_path / key).exists()
