@@ -171,32 +171,24 @@ HEADLINE += [
     "text_line_dedup",
     "dedup_takedown_expansion",
     "corpus_publish_decisions",
-    # round-11: the six r10-staged ops seated into the registry
-    # (their r10 extra_thunks rows retire — same operators, same names)
+    # tokenizer, training-order, quality-gate and centrality rows
     "text_bpe_pair_stats",
     "corpus_global_shuffle",
     "corpus_epoch_plan",
     "corpus_expectations_report",
     "corpus_pagerank_centrality",
     "text_quality_model_score",
-    # round-11 new operator
     "corpus_training_order_export",
-    # round-12: the five r11-staged ops seated into the registry
-    # (their r11 extra_thunks rows retire — same operators, same names)
     "text_bpe_encode",
     "text_bpe_fertility",
     "text_span_dedup",
     "corpus_drift_report",
     "pack_nosplit_layout",
-    # round-12: staged for r13 (registry_staged_r13), benched pre-seating
-    # like every staged batch (these thunk rows retire at r13 seating)
     "q2_min_cost_supplier",
     "q11_important_supply",
     "sketch_cms_calibration",
-    # round-12 coverage completion (found by
-    # test_bench_covers_every_query_and_staged_row): the five P-family
-    # projections and the fourteen TPC-H shapes registered across
-    # r08-r10 never had wall-time rows — every registered query now does
+    # the P-family projections and the remaining TPC-H shapes (every
+    # registered query has a wall-time row; tests/test_registry.py)
     "p1_route_topicpartition",
     "p2_default_partitioner",
     "p3_field_partitioner",
@@ -216,28 +208,14 @@ HEADLINE += [
     "q19_discounted_revenue",
     "q20_dominant_suppliers",
     "q22_dormant_customers",
-    # round-14: the two r13-staged ops seated into the registry (their
-    # staged auto-enumerated bench rows retire — same operators, same
-    # names, so the wall-time series continues unbroken)
+    # the streaming batch-equivalence rows (registry_streaming.py) and
+    # the KMV overlap planner
     "stream_cms_batch_equivalence",
     "sketch_kmv_source_overlap",
-    # round-15: the two r14-staged streaming-state ops seated into the
-    # registry (their staged auto-enumerated bench rows retire — same
-    # operators, same names, so the wall-time series continues
-    # unbroken; both now return lazy sink reads, so the r15 numbers
-    # re-anchor the series without the driver-collect overhead)
     "stream_asof_batch_equivalence",
     "stream_incremental_dedup_refresh",
-    # round-16: the two r15-staged streaming rows seated into the
-    # registry (same continuation story as above; the whole streaming
-    # family's r16 numbers re-anchor after the replay-overhead cut —
-    # reduced-shuffle span, one-job chunk drops, merged sentinel)
     "stream_sessionize_batch_equivalence",
     "stream_windowed_topk_batch_equivalence",
-    # round-17: the two r16-staged stateless foreachBatch monitors
-    # seated into the registry (their staged auto-enumerated bench rows
-    # retire — same operators, same names, so the wall-time series
-    # continues unbroken)
     "stream_drift_monitor_batch_equivalence",
     "stream_ingest_qc_batch_equivalence",
 ]
@@ -302,7 +280,7 @@ def main() -> None:
 
     queries = entrymod.queries()
     # JVM/codegen + Python-worker/Arrow warm-up (not timed) — shared
-    # definition in measure.py so time_query.py measures the same state
+    # definition in measure.py so every harness measures the same state
     from kafka_connect_oss_spark.measure import (calibrate, resolve_query,
                                                  warm_up)
 
@@ -312,21 +290,13 @@ def main() -> None:
     # measured 2-3x run-to-run swings on trivial plans), so the minimum is
     # the faithful steady-state number. Data caches are cleared between
     # reps so only JVM/codegen warm-up is amortized, never cached results.
-    # resolve_query order: driver view -> full registry (RETIRED_SEATS
-    # rows keep wall-time rows) -> staged-for-a-future-round modules.
 
     # the two BPE queries share the fit-once merge cache; warm it before
     # timing so the 24-round fit cost doesn't land in whichever of the
     # two benches first (both rows then measure encode-only)
-    from kafka_connect_oss_spark import registry_staged_r12 as _r12
-    from kafka_connect_oss_spark.registry import staged_queries
+    from kafka_connect_oss_spark import registry_llm
 
-    _r12._bpe_merges(spark, SF_DIR)
-    # every staged row is benched pre-seating AUTOMATICALLY: a new
-    # registry_staged_r* module needs no bench.py edit (HEADLINE entries
-    # for staged rows are optional ordering hints, deduped here)
-    bench_names = HEADLINE + sorted(
-        n for n in staged_queries() if n not in HEADLINE)
+    registry_llm._bpe_merges(spark, SF_DIR)
 
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
 
@@ -337,8 +307,8 @@ def main() -> None:
     # outlasts the whole rep window (r10 adjudication:
     # dedup_simhash_pairs "2.1 -> 12.2 spread 0.5" reproduced at 2.5s
     # quiet, bit-identical code bisected); a calib reading far above its
-    # quiet baseline (~0.26s min-of-3 at 32 cpus, r10-r12 measurements;
-    # scripts/time_query.py runs the same probe) marks the artifact
+    # quiet baseline (~0.26s min-of-3 at 32 cpus, r10-r12 measurements)
+    # marks the artifact
     # contaminated and every row in it inflated.
     def _calibrate() -> float:
         return calibrate(spark)
@@ -353,7 +323,7 @@ def main() -> None:
     calib_series: list[float] = [_calibrate()]
     timings: dict[str, float] = {}
     spreads: dict[str, float] = {}
-    for qi, name in enumerate(bench_names):
+    for qi, name in enumerate(HEADLINE):
         if qi and qi % _CALIB_EVERY == 0:
             calib_series.append(_calibrate())
         fn = resolve_query(name, queries)

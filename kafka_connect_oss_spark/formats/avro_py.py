@@ -15,9 +15,9 @@ directly (https://avro.apache.org/docs/current/specification/):
   avro.schema / avro.codec, 16-byte sync marker, record blocks framed as
   (count, byteSize, payload, sync);
 * codecs ``null``, ``deflate`` (raw RFC-1951 via zlib, wbits=-15),
-  ``snappy`` (pure-Python raw block format, formats/snappy_py.py, with
-  the spec's big-endian CRC32-of-uncompressed suffix — the reference's
-  explicitly tested codec, TestDataWriterAvro.java:154-167), ``bzip2``
+  ``snappy`` (pyarrow's raw block codec with the spec's big-endian
+  CRC32-of-uncompressed suffix — the reference's explicitly tested
+  codec, TestDataWriterAvro.java:154-167), ``bzip2``
   (stdlib bz2) and ``xz`` (stdlib lzma, FORMAT_XZ).
 
 Scale posture: encoding runs inside ``applyInPandas`` on executors — one
@@ -492,24 +492,46 @@ def _deflate(raw: bytes) -> bytes:
 def _snappy_enc(raw: bytes) -> bytes:
     # Avro spec: snappy blocks carry a 4-byte BIG-ENDIAN CRC32 of the
     # UNCOMPRESSED data after the compressed bytes
-    from kafka_connect_oss_spark.formats import snappy_py
-    return (snappy_py.compress(raw)
+    import pyarrow as pa
+
+    return (pa.Codec("snappy").compress(raw, asbytes=True)
             + (zlib.crc32(raw) & 0xFFFFFFFF).to_bytes(4, "big"))
 
 
+def _snappy_uncompressed_len(block: bytes) -> int:
+    """The raw snappy preamble: the uncompressed length as a
+    little-endian base-128 varint of at most 5 bytes (< 2**32)."""
+    n = 0
+    for i, b in enumerate(block[:5]):
+        n |= (b & 0x7F) << (7 * i)
+        if not b & 0x80:
+            # no snappy element expands more than 64/3-fold, so a larger
+            # claim is corrupt (and would size a huge output buffer)
+            if n >= 1 << 32 or n > 22 * len(block):
+                break
+            return n
+    raise ValueError("snappy block has a malformed length prefix")
+
+
 def _snappy_dec(payload: bytes) -> bytes:
-    from kafka_connect_oss_spark.formats import snappy_py
+    import pyarrow as pa
+
     if len(payload) < 4:
         raise ValueError("snappy block too short for CRC suffix")
-    raw = snappy_py.decompress(payload[:-4])
+    block = payload[:-4]
+    n = _snappy_uncompressed_len(block)
+    try:
+        raw = pa.Codec("snappy").decompress(block, decompressed_size=n,
+                                            asbytes=True)
+    except (OSError, pa.ArrowException) as e:
+        raise ValueError(f"corrupt snappy block: {e}") from e
     if (zlib.crc32(raw) & 0xFFFFFFFF).to_bytes(4, "big") != payload[-4:]:
         raise ValueError("snappy block CRC mismatch (corrupt container)")
     return raw
 
 
 # block transforms per the Avro 1.11 container spec (all deterministic:
-# fixed compression parameters, no timestamps in any of these formats);
-# snappy is the pure-Python raw-block implementation in snappy_py.py
+# fixed compression parameters, no timestamps in any of these formats)
 _CODEC_ENCODE = {
     "null": lambda raw: raw,
     "deflate": _deflate,

@@ -1,7 +1,7 @@
-"""Shared measurement primitives for bench.py and scripts/time_query.py.
+"""Shared measurement primitives for bench.py and perfbench/run.py.
 
 The ambient-load calibration plan MUST stay code-identical across
-rounds and across the two consumers — its quiet baseline (~0.26 s
+rounds and across the consumers — its quiet baseline (~0.26 s
 min-of-3 at 32 cpus; >0.4 s marks the reading contaminated, the
 r10/r11 adjudication rule) is only comparable because the probe never
 changes. Keeping one definition here is what guarantees that; an edit
@@ -37,9 +37,7 @@ def warm_up(spark, cpus: int) -> None:
 
 
 def resolve_query(name: str, driver_queries: dict):
-    """Timer lookup order: driver view -> full registry (RETIRED_SEATS
-    rows keep wall-time rows) -> staged-for-a-future-round modules."""
-    from kafka_connect_oss_spark.registry import QUERIES, staged_queries
+    """Timer lookup: the driver view, then the full registry."""
+    from kafka_connect_oss_spark.registry import QUERIES
 
-    fn = driver_queries.get(name) or QUERIES.get(name)
-    return fn if fn is not None else staged_queries()[name]
+    return driver_queries.get(name) or QUERIES[name]

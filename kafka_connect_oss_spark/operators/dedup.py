@@ -867,8 +867,8 @@ def containment_pairs(docs: DataFrame, text_col: str = "text",
     staging was supposed to buy. The consumer plan's counted Exchanges
     rise from 2 to 3, at sf0.001 and sf0.1 alike: the df-count Exchange
     used to run in the staged job, hidden behind its LogicalRDD, and is
-    now inline (plan pin in tests/test_plan_guards.py, plan in
-    PLANS.md).
+    now inline (the dedup_containment_pairs plan pin in
+    tests/test_plan_guards.py).
 
     Returns (id_a, id_b, containment) with id_a < id_b, containment
     rounded to 4 (identical double math in the DuckDB oracle).

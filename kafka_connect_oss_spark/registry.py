@@ -1,9 +1,13 @@
 """Query registry: batch-queryable form of every implemented operator.
 
-Each entry pairs a PySpark DataFrame builder with (where SQL-expressible) an
-ANSI-SQL oracle that DuckDB runs on the same parquet tables. The driver
-(`__spark_entry__.py`) compares row counts, schemas, and order-insensitive
-value hashes, so:
+This module holds the routing/partitioning/rotation/decoding rows; each
+other operator family has its own ``registry_<family>.py``, all imported
+at the foot of this module. Each entry pairs a function returning a
+PySpark DataFrame with an ANSI-SQL oracle (static, or in LAZY_ORACLES
+when it inlines a model fitted from the data) that DuckDB runs on the
+same parquet tables.
+The driver (`__spark_entry__.py`) compares row counts, schemas, and
+order-insensitive value hashes, so:
 
 * every computed column is explicitly aliased identically in both forms;
 * every floating-point output is rounded (both sides compute the identical
@@ -37,7 +41,19 @@ LAZY_ORACLES: dict[str, Callable[[str], str]] = {}
 _REC = f"WITH rec AS ({SINK_RECORDS_SQL})"
 
 
+def _cents(col: str) -> str:
+    """SQL for a money column as BIGINT cents (half-up), shared by the
+    relational and TPC-H families so both engines sum exact integers."""
+    return f"CAST(floor({col} * 100 + 0.5) AS BIGINT)"
+
+
 def register(name: str, oracle: str | None = None):
+    """Register ``fn`` as query ``name`` (with its DuckDB oracle, if any).
+    A name may be registered once: a row defined in two family modules
+    fails at import instead of one silently shadowing the other."""
+    if name in QUERIES:
+        raise ValueError(f"query {name!r} is already registered")
+
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             # datetime formatting must agree with DuckDB's naive-UTC stamps
@@ -54,66 +70,6 @@ def register(name: str, oracle: str | None = None):
         return wrapped
 
     return deco
-
-
-def _force_full_registration() -> None:
-    """Import every registration module (registry_* plus the seated
-    shims) so the QUERIES snapshot the staged_* helpers subtract is
-    complete. Without this, staged_queries() called before
-    __spark_entry__ imported the seated modules would report
-    already-seated rows as 'staged' (observed: 8 instead of 3) — the
-    result depended on the caller's import order. Imports EVERYTHING
-    matching registry_* EXCEPT the registry_staged_r* definition
-    modules (which must never self-register) — a new registry_<family>
-    module is picked up automatically instead of silently skipped,
-    which would quietly reintroduce the import-order bug (r13 ADVICE
-    2)."""
-    import importlib
-    import pkgutil
-    import re
-
-    import kafka_connect_oss_spark as pkg
-
-    for m in pkgutil.iter_modules(pkg.__path__):
-        if (m.name.startswith("registry_")
-                and not re.fullmatch(r"registry_staged(_r\d+)?", m.name)):
-            importlib.import_module(f"kafka_connect_oss_spark.{m.name}")
-
-
-def _staged_modules():
-    import importlib
-    import pkgutil
-    import re
-
-    import kafka_connect_oss_spark as pkg
-
-    _force_full_registration()
-    for m in pkgutil.iter_modules(pkg.__path__):
-        if re.fullmatch(r"registry_staged_r\d+", m.name):
-            yield importlib.import_module(
-                f"kafka_connect_oss_spark.{m.name}")
-
-
-def staged_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Union of STAGED_QUERIES over every ``registry_staged_r*`` module,
-    minus anything already registered — the bench/timer fallback for rows
-    staged for a future round, discovered by round number so a new
-    staging round needs no edits in the consumers (bench.py,
-    scripts/time_query.py)."""
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for mod in _staged_modules():
-        out.update(getattr(mod, "STAGED_QUERIES", {}))
-    return {k: v for k, v in out.items() if k not in QUERIES}
-
-
-def staged_oracles() -> dict[str, str]:
-    """Companion to :func:`staged_queries`: the static oracle strings of
-    not-yet-registered staged rows (lazy oracle factories are excluded —
-    resolve those through the staging module itself)."""
-    out: dict[str, str] = {}
-    for mod in _staged_modules():
-        out.update(getattr(mod, "STAGED_ORACLES", {}))
-    return {k: v for k, v in out.items() if k not in QUERIES}
 
 
 # --------------------------------------------------------------------------
@@ -594,3 +550,11 @@ def e3_json_dlq_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
                      .alias("status"))
             .agg(F.count(F.lit(1)).cast("long").alias("n"),
                  F.count("k").cast("long").alias("n_decoded_k")))
+
+
+# Every operator family registers its rows on import; importing them here
+# makes QUERIES complete after a bare ``import kafka_connect_oss_spark.registry``.
+# They import this module's names above, so the imports must stay at the foot.
+from kafka_connect_oss_spark import (registry_llm, registry_multimodal,  # noqa: E402,F401
+                                     registry_relational, registry_streaming,
+                                     registry_tpch)

@@ -12,10 +12,13 @@ from kafka_connect_oss_spark.functions import hashing as H
 from kafka_connect_oss_spark.functions.rounding import fround, round_sql
 from kafka_connect_oss_spark.functions import text as X
 from kafka_connect_oss_spark.functions import vectors as V
-from kafka_connect_oss_spark.operators import dedup, similarity
+from kafka_connect_oss_spark.operators import (bpe, dedup, graph,
+                                               quality_model, similarity)
+from kafka_connect_oss_spark.operators import drift as DRIFT
 from kafka_connect_oss_spark.operators import packing as PK
 from kafka_connect_oss_spark.operators import sketches as SK
 from kafka_connect_oss_spark.operators import text as TXT
+from kafka_connect_oss_spark.operators import validation as VAL
 from kafka_connect_oss_spark.registry import LAZY_ORACLES, register
 from kafka_connect_oss_spark.sources.batch import load_table
 
@@ -678,6 +681,19 @@ def sim_ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.ann_ivf_topk(emb, q, k=10, nprobe=4, centroids=cents)
 
 
+def _oracle_session() -> SparkSession:
+    """The active SparkSession, or a local one: lazy oracles that inline a
+    data-fitted model need Spark to fit it (the driver and the test suite
+    both have a session by the time oracles are resolved)."""
+    return SparkSession.getActiveSession() or (
+        SparkSession.builder.master("local[8]")
+        .config("spark.ui.enabled", "false")
+        .config("spark.driver.memory", "8g")
+        .config("spark.sql.shuffle.partitions", "8")
+        .config("spark.sql.session.timeZone", "UTC")
+        .getOrCreate())
+
+
 _KMEANS_ORACLE_CACHE: dict[str, str] = {}
 
 
@@ -686,21 +702,9 @@ def _kmeans_ivf_oracle(sf_dir: str) -> str:
     deterministic spherical k-means fit the query runs (independent runs
     produce bit-identical models — the 9-decimal mean rounding is the
     determinism guarantee, pinned by test_similarity_kmeans), then inline
-    the fitted (cid, cv) rows as a VALUES CTE in the shared IVF oracle.
-    Reuses the active SparkSession; builds a local one only if none exists
-    (the driver and the test suite both have one by the time oracles are
-    resolved)."""
+    the fitted (cid, cv) rows as a VALUES CTE in the shared IVF oracle."""
     if sf_dir not in _KMEANS_ORACLE_CACHE:
-        from pyspark.sql import SparkSession
-
-        spark = SparkSession.getActiveSession() or (
-            SparkSession.builder.master("local[8]")
-            .config("spark.ui.enabled", "false")
-            .config("spark.driver.memory", "8g")
-            .config("spark.sql.shuffle.partitions", "8")
-            .config("spark.sql.session.timeZone", "UTC")
-            .getOrCreate())
-        emb = load_table(spark, sf_dir, "embeddings")
+        emb = load_table(_oracle_session(), sf_dir, "embeddings")
         cents = similarity.kmeans_centroids(emb, n_centroids=16, n_iters=5)
         rows = sorted(cents.collect(), key=lambda r: r.cid)
         vals = ", ".join(
@@ -2364,3 +2368,297 @@ def corpus_training_order_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     The digest pins every instance's shuffle position and pack id."""
     return PK.training_order_export(
         load_table(spark, sf_dir, "documents"), **_TOE_ARGS)
+
+
+# --------------------------------------------------------------------------
+# Tokenizer training: BPE pair statistics, corpus-fitted encode, fertility
+# --------------------------------------------------------------------------
+
+@register("text_bpe_pair_stats", bpe.pair_stats_oracle_sql("documents"))
+def text_bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Round-1 BPE pair statistics over the documents corpus
+    (operators/bpe.pair_stats): the argmax row is the first merge a
+    tokenizer training run would learn."""
+    return bpe.pair_stats(load_table(spark, sf_dir, "documents"))
+
+
+#: merge-table size shared by the query and its lazy oracle; 24 keeps the
+#: oracle's packed-replace replay (one replace per merge) readable while
+#: exercising multi-character merges well past the first round
+BPE_N_MERGES = 24
+
+_BPE_MERGE_CACHE: dict[str, list] = {}
+
+
+def _bpe_merges(spark: SparkSession, sf_dir: str) -> list:
+    """Fit-once-per-sf cache shared by the query and its lazy oracle —
+    legitimate because fit_bpe_merges is DETERMINISTIC (vocab-scale
+    argmax with freq-desc + lexicographic tie-break, pinned by
+    tests/test_bpe.py), the same discipline as the k-means and
+    quality-model lazy oracles."""
+    if sf_dir not in _BPE_MERGE_CACHE:
+        docs = load_table(spark, sf_dir, "documents")
+        _BPE_MERGE_CACHE[sf_dir] = bpe.fit_bpe_merges(docs, BPE_N_MERGES)
+    return _BPE_MERGE_CACHE[sf_dir]
+
+
+@register("text_bpe_encode")
+def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Corpus tokenization with a corpus-fitted BPE merge table
+    (operators/bpe.fit_bpe_merges + bpe_encode_ranked): the end-to-end
+    tokenizer-training -> encoding path, per doc (n_tokens + the
+    space-joined token string — subword pieces contain no spaces, the
+    words were split on them). The ranked greedy encoder runs in one
+    Arrow-batched mapInPandas pass, merge table shipped once per
+    executor; ranked == in-order-replay == the oracle's packed replace
+    is pinned by test_bpe."""
+    docs = load_table(spark, sf_dir, "documents")
+    merges = _bpe_merges(spark, sf_dir)
+    enc = bpe.bpe_encode_ranked(docs, merges)
+    return enc.select(
+        "doc_id", "n_tokens",
+        F.array_join("tokens", " ").alias("tokens_str"))
+
+
+def _bpe_encode_oracle(sf_dir: str) -> str:
+    merges = _bpe_merges(_oracle_session(), sf_dir)
+    return bpe.bpe_encode_oracle_sql("documents", merges)
+
+
+LAZY_ORACLES["text_bpe_encode"] = _bpe_encode_oracle
+
+
+@register("text_bpe_fertility")
+def text_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-language tokenizer fertility under the corpus-fitted merge
+    table (operators/bpe.fertility_report): subword tokens per word and
+    chars per token by lang — the eval row set a tokenizer-training run
+    reads before the mixture bakes in over-segmented minority
+    languages. Shares the deterministic fit cache with
+    text_bpe_encode."""
+    docs = load_table(spark, sf_dir, "documents")
+    return bpe.fertility_report(docs, _bpe_merges(spark, sf_dir))
+
+
+def _bpe_fertility_oracle(sf_dir: str) -> str:
+    merges = _bpe_merges(_oracle_session(), sf_dir)
+    return bpe.fertility_report_oracle_sql("documents", merges)
+
+
+LAZY_ORACLES["text_bpe_fertility"] = _bpe_fertility_oracle
+
+
+# --------------------------------------------------------------------------
+# Learned quality classifier
+# --------------------------------------------------------------------------
+
+_QM_MODEL_CACHE: dict[str, dict] = {}
+
+
+def _qm_model(spark: SparkSession, sf_dir: str) -> dict:
+    """Fit-once-per-sf cache shared by the query and its lazy oracle —
+    legitimate because fit_quality_classifier is DETERMINISTIC
+    (hash-stride sample sorted by id, fixed iters, 9-decimal rounding:
+    independent runs produce bit-identical models, pinned by
+    tests/test_quality_model.py), the same discipline as the k-means
+    lazy oracle _kmeans_ivf_oracle."""
+    if sf_dir not in _QM_MODEL_CACHE:
+        docs = load_table(spark, sf_dir, "documents")
+        _QM_MODEL_CACHE[sf_dir] = quality_model.fit_quality_classifier(docs)
+    return _QM_MODEL_CACHE[sf_dir]
+
+
+@register("text_quality_model_score")
+def text_quality_model_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Learned quality probability per document: fit the Gopher-gate
+    distillation (operators/quality_model.fit_quality_classifier), then
+    score the corpus with the literal-inlined sigmoid — one codegen
+    projection, zero shuffle at scoring time."""
+    docs = load_table(spark, sf_dir, "documents")
+    return quality_model.quality_score(docs, _qm_model(spark, sf_dir))
+
+
+def _qm_oracle(sf_dir: str) -> str:
+    """Lazy oracle: re-fit (or reuse the cached fit) at the oracle's SF
+    and inline the model literals into the DuckDB sigmoid."""
+    model = _qm_model(_oracle_session(), sf_dir)
+    return quality_model.quality_score_oracle_sql("documents", model)
+
+
+LAZY_ORACLES["text_quality_model_score"] = _qm_oracle
+
+
+# --------------------------------------------------------------------------
+# Training-order planning, data-quality gates, similarity-graph centrality
+# --------------------------------------------------------------------------
+
+#: parameters shared by the query and the oracle — one constant each so
+#: the call sites cannot drift
+SHUFFLE_SEED = 7
+EPOCH_BUDGET_TOKENS = 1_000_000
+
+
+@register("corpus_global_shuffle", PK.global_shuffle_oracle_sql(
+    "documents", seed=SHUFFLE_SEED, cols="doc_id"))
+def corpus_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Seeded training-order permutation (packing.global_shuffle) over a
+    narrow id projection — the registry form carries (doc_id,
+    shuffle_key, shard, pos) only; the full-width form is the same plan
+    plus passthrough columns."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
+    return PK.global_shuffle(docs, seed=SHUFFLE_SEED)
+
+
+@register("corpus_epoch_plan", PK.epoch_plan_oracle_sql(
+    "documents", budget_tokens=EPOCH_BUDGET_TOKENS))
+def corpus_epoch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source epoch/repeat budget plan (packing.epoch_plan) at the
+    natural-sampling weights."""
+    return PK.epoch_plan(load_table(spark, sf_dir, "documents"),
+                         budget_tokens=EPOCH_BUDGET_TOKENS)
+
+
+#: the documents-table expectation suite (operators/validation): evaluated
+#: in ONE aggregate pass however many checks it carries
+DOC_EXPECTATIONS = [
+    VAL.not_null("doc_id"),
+    VAL.unique("doc_id"),
+    VAL.not_null("text"),
+    VAL.accepted_values("lang", ["de", "en", "es", "fr", "zh"]),
+    VAL.matches("source", "^src[0-9]+$"),
+    VAL.in_range("n_chars", 1, 100_000),
+    VAL.satisfies("n_chars_consistent", "n_chars = length(text)"),
+]
+
+
+@register(
+    "corpus_expectations_report",
+    "SELECT * FROM ("
+    + VAL.expectations_report_oracle_sql("documents", DOC_EXPECTATIONS)
+    + ") UNION ALL SELECT * FROM ("
+    + VAL.referential_expectation_oracle_sql(
+        "orders", "o_custkey", "customer", "c_custkey") + ")")
+def corpus_expectations_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Data-quality gate before a training run: the single-pass documents
+    battery plus one cross-table referential check (every event's doc
+    linkage analog here: orders.o_custkey contained in customer) — the
+    Deequ-style report as a queryable frame."""
+    docs = load_table(spark, sf_dir, "documents")
+    battery = VAL.expectations_report(docs, DOC_EXPECTATIONS)
+    ref = VAL.referential_expectation(
+        load_table(spark, sf_dir, "orders"), "o_custkey",
+        load_table(spark, sf_dir, "customer"), "c_custkey")
+    return battery.unionByName(ref)
+
+
+@register("corpus_pagerank_centrality")
+def corpus_pagerank_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Centrality over the near-dup similarity graph: the registered
+    dedup_ngram_jaccard_pairs edge set (same blocks, same threshold) run
+    through operators/graph.pagerank — a redundancy-aware quality prior
+    and the canonical-pick score for cluster representatives."""
+    docs = load_table(spark, sf_dir, "documents")
+    pairs = dedup.ngram_jaccard_pairs(
+        docs, block_cols=["lang", "source"], threshold=JACCARD_DEMO)
+    return graph.pagerank(pairs, n_iters=5)
+
+
+def _pagerank_oracle(sf_dir: str) -> str:
+    """The SQL is sf-independent: the jaccard pair CTE embeds as a nested
+    WITH."""
+    return graph.pagerank_oracle_sql(_ngram_jaccard_oracle(), n_iters=5)
+
+
+LAZY_ORACLES["corpus_pagerank_centrality"] = _pagerank_oracle
+
+
+# --------------------------------------------------------------------------
+# Exact-substring span excision, snapshot drift, whole-document packing
+# --------------------------------------------------------------------------
+
+@register("text_span_dedup", TXT.span_dedup_oracle_sql("documents"))
+def text_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact-substring span excision (operators/text.span_dedup): every
+    cross-doc-duplicated merged chunk interval is cut out of the text,
+    keeping the remainder in order — the repair half of Lee et al.
+    2021's exact-substring dedup (dedup_span_coverage is the decision
+    half over the same chunk grid)."""
+    return TXT.span_dedup(load_table(spark, sf_dir, "documents"))
+
+
+_DRIFT_BASE_SQL = "(SELECT * FROM documents WHERE doc_id % 10 <> 9)"
+# SELECT * REPLACE keeps the oracle tracking the documents schema: a new
+# column can't silently diverge this subquery from the Spark side's
+# withColumn
+_DRIFT_SNAP_SQL = (
+    "(SELECT * REPLACE (CASE WHEN doc_id % 7 = 3 "
+    "THEN text || ' drifted vocabulary injection' ELSE text END AS text) "
+    "FROM documents WHERE doc_id % 10 <> 0)")
+
+
+@register("corpus_drift_report",
+          DRIFT.drift_report_oracle_sql(_DRIFT_BASE_SQL, _DRIFT_SNAP_SQL))
+def corpus_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source distribution-shift report (operators/drift.
+    drift_report) between two snapshots carved from the documents table
+    with the corpus_snapshot_diff demo convention — base lacks the
+    doc_id%10==9 stratum, snap drops %10==0 and rewrites %7==3 with an
+    injected vocabulary — so churn, removal, AND real lexical drift are
+    all present in the report."""
+    docs = load_table(spark, sf_dir, "documents")
+    base = docs.where(F.col("doc_id") % 10 != 9)
+    snap = (docs.where(F.col("doc_id") % 10 != 0)
+            .withColumn("text",
+                        F.when(F.col("doc_id") % 7 == 3,
+                               F.concat(F.col("text"),
+                                        F.lit(" drifted vocabulary"
+                                              " injection")))
+                        .otherwise(F.col("text"))))
+    return DRIFT.drift_report(base, snap)
+
+
+#: no-split pack budget — 128 tokens puts ~2 synthetic docs per pack, so
+#: overflow, multi-pack shards, AND the oversize path all exercise
+NOSPLIT_BUDGET = 128
+
+
+@register("pack_nosplit_layout", PK.pack_documents_nosplit_oracle_sql(
+    "documents", budget_tokens=NOSPLIT_BUDGET))
+def pack_nosplit_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Whole-document SFT packing (operators/packing.
+    pack_documents_nosplit): greedy next-fit, longest-first, one
+    sequential Arrow pass per shard — the no-split complement of the
+    concat-and-split pack_training_sequences."""
+    return PK.pack_documents_nosplit(
+        load_table(spark, sf_dir, "documents"),
+        budget_tokens=NOSPLIT_BUDGET)
+
+
+# --------------------------------------------------------------------------
+# Bounded-memory sketches: Count-Min calibration, KMV source overlap
+# --------------------------------------------------------------------------
+
+@register("sketch_cms_calibration", SK.cms_calibration_oracle_sql("documents"))
+def sketch_cms_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Count-Min-Sketch point-query error on the exact top-k tokens
+    (operators/sketches.cms_calibration): the bounded-memory
+    token-frequency path for 100 TB — the d x w counter table is
+    mergeable across shards/micro-batches and at most d*w rows ever
+    cross the final shuffle, vs the corpus-scale exact token table. The
+    row reports (exact_freq, cms_est, overestimate) for the exact
+    top-20, attesting both the sketch build and its one-sided guarantee
+    (est >= exact always; tests/test_cms.py forces collisions at tiny w
+    to pin the non-trivial side)."""
+    docs = load_table(spark, sf_dir, "documents")
+    return SK.cms_calibration(docs)
+
+
+@register("sketch_kmv_source_overlap",
+          SK.kmv_source_overlap_oracle_sql("documents"))
+def sketch_kmv_source_overlap(spark: SparkSession,
+                              sf_dir: str) -> DataFrame:
+    """All-pairs cross-source overlap estimates from per-source KMV
+    shingle sketches (operators/sketches.kmv_source_overlap) — the
+    planner that decides which pairs are worth the exact
+    corpus_cross_source_overlap matrix."""
+    return SK.kmv_source_overlap(load_table(spark, sf_dir, "documents"))

@@ -22,16 +22,12 @@ from pyspark.sql import functions as F
 from kafka_connect_oss_spark.functions import hashing as H
 from kafka_connect_oss_spark.functions.rounding import fround
 from kafka_connect_oss_spark.operators import sketches as SK
-from kafka_connect_oss_spark.registry import register
+from kafka_connect_oss_spark.registry import _cents, register
 from kafka_connect_oss_spark.sources.batch import load_table
 
 SESSION_GAP_MS = 30 * 60 * 1000
 
 # exact integer cents from a 2-decimal double (dialect-neutral SQL)
-def _cents(col: str) -> str:
-    return f"CAST(floor({col} * 100 + 0.5) AS BIGINT)"
-
-
 def _us(col) -> F.Column:
     """epoch micros, tolerant of TIMESTAMP_NTZ inputs: unix_micros requires
     TIMESTAMP, and the NTZ->TS cast is value-preserving under the engine's

@@ -29,6 +29,7 @@ worker, nothing is installed.
 
 from __future__ import annotations
 
+import atexit
 import os
 import sys
 import tempfile
@@ -43,15 +44,25 @@ _SENT_TO: set[str] = set()
 _ZIP_PATH: str | None = None
 
 
+def _remove_zip(path: str) -> None:
+    try:
+        os.remove(path)
+    except OSError:
+        pass
+
+
 def _build_zip() -> str:
     """Zip the installed package (once per process) with the package dir at
-    the archive root, the layout ``--py-files`` expects."""
+    the archive root, the layout ``--py-files`` expects. The zip is
+    removed when the interpreter exits."""
     global _ZIP_PATH
     if _ZIP_PATH is not None and os.path.exists(_ZIP_PATH):
         return _ZIP_PATH
     pkg_root = os.path.dirname(os.path.abspath(__file__))
     path = os.path.join(tempfile.gettempdir(),
                         f"kafka_connect_oss_spark-{os.getpid()}.zip")
+    if _ZIP_PATH is None:
+        atexit.register(_remove_zip, path)
     with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as zf:
         for dirpath, dirnames, filenames in os.walk(pkg_root):
             dirnames[:] = [d for d in dirnames if d != "__pycache__"]

@@ -1,11 +1,10 @@
 """Bounded-replay harness utilities for the streaming golden rows.
 
-The driver-attested streaming rows (registry_staged_r15 / _r16 cohorts)
-all share one replay shape: materialize a batch table as a handful of
-time-ordered single-file micro-batches plus a far-future sentinel,
-stream them with maxFilesPerTrigger=1, and read the sink back lazily.
-These helpers are that shape's shared plumbing, factored out after the
-r15 round grew a second diverging copy of each (code-review finding).
+The streaming registry rows (registry_streaming.py) all share one
+replay shape: materialize a batch table as a handful of time-ordered
+single-file micro-batches plus a far-future sentinel, stream them with
+maxFilesPerTrigger=1, and read the sink back lazily. These helpers are
+that shape's one definition site.
 
 Everything here is HARNESS-ONLY: a deployed stream arrives from Kafka
 in arrival order, writes to a durable sink, and never plans its own

@@ -14,7 +14,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402
 
-import __spark_entry__ as E  # noqa: E402
+from kafka_connect_oss_spark.registry import (  # noqa: E402
+    LAZY_ORACLES, ORACLES, QUERIES)
 from tests.parity import assert_types  # noqa: E402
 
 SF = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
@@ -26,15 +27,9 @@ spark = (SparkSession.builder.master("local[32]")
          .getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
 
-# FULL registry, not the driver view: RETIRED_SEATS rows keep
-# full-registry checking (the capacity-policy promise), and rows staged
-# for a future round join the sweep pre-seating. Lazy oracles resolve
-# at the audit SF exactly as the driver's oracle_sql() does.
-from kafka_connect_oss_spark.registry import (  # noqa: E402
-    LAZY_ORACLES, ORACLES, QUERIES, staged_oracles, staged_queries)
-
-qs = {**staged_queries(), **QUERIES}
-osql = {**staged_oracles(), **ORACLES}
+# lazy oracles resolve at the audit SF exactly as the driver's
+# oracle_sql() does
+osql = dict(ORACLES)
 for _name, _factory in LAZY_ORACLES.items():
     try:
         osql[_name] = _factory(SF)
@@ -48,13 +43,13 @@ for t in ["region", "nation", "customer", "supplier", "part", "orders",
                 f"read_parquet('{SF}/{t}.parquet')")
 
 names = ([n.strip() for n in os.environ["ONLY"].split(",") if n.strip()]
-         if os.environ.get("ONLY") else list(qs))
+         if os.environ.get("ONLY") else list(QUERIES))
 bad, errs = [], []
 for name in names:
     if name not in osql:
         continue
     try:
-        sdf = qs[name](spark, SF)
+        sdf = QUERIES[name](spark, SF)
         assert_types(sdf.dtypes, con, osql[name], name)
     except AssertionError as ex:
         bad.append(name)

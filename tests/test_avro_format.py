@@ -1,11 +1,12 @@
 """F2/E5 Avro container format through the deterministic-commit pipeline,
 mirroring TestDataWriterAvro.java:110-604: round-trip equality, the codec
-matrix (:154-167 — null/deflate exercised, snappy gated), byte-identical
+matrix (:154-167 — null/deflate/snappy/bzip2/xz exercised), byte-identical
 re-upload (:226-247), and the §1.3 type table through avro encoding.
 
 Runs against the pure-Python container implementation (formats/avro_py)
 when the spark-avro jar is absent — i.e. always, in this environment."""
 
+import zlib
 from datetime import date, datetime
 from decimal import Decimal
 
@@ -56,23 +57,26 @@ def test_avro_deflate_codec_roundtrip(spark, sf_dir, tmp_path):
 
 def test_avro_idempotent_reupload_byte_identical(spark, sf_dir, tmp_path):
     # determinism contract (README.md:119-125; TestDataWriterAvro.java:226-247):
-    # re-running the same batch must reproduce identical bytes per key
-    cfg = PipelineConfig(url=str(tmp_path / "out"), format="avro",
-                         flush_size=2000, avro_codec="deflate")
+    # re-running the same batch must reproduce identical bytes per key,
+    # for the default codec and for snappy
     rec = sink_records(spark, sf_dir)
-    keys1 = commit_batch(rec, _default_enc(), cfg)
-    before = {k: (tmp_path / "out" / k).read_bytes() for k in keys1}
-    keys2 = commit_batch(rec, _default_enc(), cfg)
-    assert keys1 == keys2
-    for k in keys1:
-        assert (tmp_path / "out" / k).read_bytes() == before[k]
+    for codec in ("deflate", "snappy"):
+        out = tmp_path / codec
+        cfg = PipelineConfig(url=str(out), format="avro",
+                             flush_size=2000, avro_codec=codec)
+        keys1 = commit_batch(rec, _default_enc(), cfg)
+        before = {k: (out / k).read_bytes() for k in keys1}
+        keys2 = commit_batch(rec, _default_enc(), cfg)
+        assert keys1 == keys2, codec
+        for k in keys1:
+            assert (out / k).read_bytes() == before[k], (codec, k)
 
 
 @pytest.mark.parametrize("codec", ["bzip2", "xz", "snappy"])
 def test_avro_stdlib_codec_roundtrip(spark, sf_dir, tmp_path, codec):
     # remaining spec codecs (TestDataWriterAvro.java:154-167 codec matrix;
-    # snappy is the reference's explicitly tested codec, here the
-    # pure-Python raw block format + CRC32 suffix of snappy_py.py)
+    # snappy is the reference's explicitly tested codec, here pyarrow's
+    # raw block format + the spec's CRC32 suffix)
     cfg = PipelineConfig(url=str(tmp_path / "out"), format="avro",
                          flush_size=1500, avro_codec=codec)
     rec = sink_records(spark, sf_dir)
@@ -116,6 +120,42 @@ def test_avro_snappy_block_crc_rejected(spark):
     data[body_off + 4] ^= 0xFF
     with pytest.raises(Exception, match="snappy|corrupt|sync"):
         avro_py.read_container(bytes(data))
+
+
+#: a 12-row snappy container written by the earlier pure-Python snappy
+#: encoder (its blocks use literal and 1-byte-offset copy elements, which
+#: pyarrow's encoder emits differently); the pyarrow-backed reader must
+#: still decode it
+_LEGACY_SNAPPY_CONTAINER = bytes.fromhex(
+    "4f626a0104166176726f2e736368656d61de017b226669656c6473223a205b7b"
+    "226e616d65223a20226964222c202274797065223a20226c6f6e67227d2c207b"
+    "226e616d65223a2022776f7264222c202274797065223a2022737472696e6722"
+    "7d5d2c20226e616d65223a202272222c202274797065223a20227265636f7264"
+    "227d146176726f2e636f6465630c736e6170707900f47275d9559bdbdb33fc39"
+    "baee7a4abd18a401960128000e736e617070792d02121a09000c61620416220b"
+    "000c6162061a2a0d000c6162081e320f000861620a1e4100000c264100000e2e"
+    "4100001036410000123e410000141e41000016264100491e234af47275d9559b"
+    "dbdb33fc39baee7a4abd")
+
+
+def test_avro_snappy_legacy_container_decodes():
+    schema, rows = avro_py.read_container(_LEGACY_SNAPPY_CONTAINER)
+    assert [f["name"] for f in schema["fields"]] == ["id", "word"]
+    assert rows == [{"id": i, "word": "snappy-" + "ab" * (i % 5)}
+                    for i in range(12)]
+
+
+@pytest.mark.parametrize("block", [
+    b"",                           # no length prefix at all
+    b"\x80\x80",                   # varint runs off the end
+    b"\xff\xff\xff\xff\xff\x01",   # varint longer than 5 bytes
+    b"\xff\xff\xff\xff\x7f\x00",   # claims far more than it can expand to
+    b"\x05\x0e\x01",               # copy before any literal: codec error
+])
+def test_avro_snappy_malformed_block_rejected(block):
+    payload = block + (zlib.crc32(b"") & 0xFFFFFFFF).to_bytes(4, "big")
+    with pytest.raises(ValueError, match="snappy"):
+        avro_py._snappy_dec(payload)
 
 
 def test_avro_type_table_roundtrip(spark, tmp_path):

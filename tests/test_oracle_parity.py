@@ -3,17 +3,6 @@ the driver runs (CORRECTNESS_r{N}.json), kept green locally at sf0.001."""
 
 import pytest
 
-import kafka_connect_oss_spark.registry_llm  # noqa: F401 (registers entries)
-import kafka_connect_oss_spark.registry_multimodal  # noqa: F401 (registers entries)
-import kafka_connect_oss_spark.registry_relational  # noqa: F401 (registers entries)
-import kafka_connect_oss_spark.registry_seated  # noqa: F401 (seats the r10 staged ops)
-import kafka_connect_oss_spark.registry_seated_r12  # noqa: F401 (seats the r12 staged ops)
-import kafka_connect_oss_spark.registry_seated_r13  # noqa: F401 (seats the r13 staged ops)
-import kafka_connect_oss_spark.registry_seated_r14  # noqa: F401 (seats the r14 staged ops)
-import kafka_connect_oss_spark.registry_seated_r15  # noqa: F401 (seats the r15 staged ops)
-import kafka_connect_oss_spark.registry_seated_r16  # noqa: F401 (seats the r16 staged ops)
-import kafka_connect_oss_spark.registry_seated_r17  # noqa: F401 (seats the r17 staged ops)
-import kafka_connect_oss_spark.registry_tpch  # noqa: F401 (registers entries)
 from kafka_connect_oss_spark.registry import LAZY_ORACLES, ORACLES, QUERIES
 from tests.parity import compare, duck_connection
 

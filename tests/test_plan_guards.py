@@ -1,12 +1,11 @@
-"""Plan-regression guard (r11 VERDICT item 6).
+"""Plan-regression guard: the single source of plan evidence.
 
-PLANS.md documents, per showcase query, the physical-plan properties the
-scale story depends on (pushdown, broadcast, TopK heaps, bounded
-Exchange counts). PLANS.md is regenerated by hand, so an edit that
-silently added a shuffle used to surface only at a judge read. This
-module turns those "Check:" lines into assertions: each pinned query's
-`explain("formatted")` output must keep its required markers, avoid its
-forbidden ones, and not grow new shuffle Exchanges.
+Each pin below records, per showcase query, the physical-plan properties
+the scale story depends on (pushdown, broadcast, TopK heaps, bounded
+Exchange counts); its comment says why the plan has that shape. Each
+pinned query's `explain("formatted")` output must keep its required
+markers, avoid its forbidden ones, and not grow new shuffle Exchanges,
+so an edit that silently adds a shuffle fails here.
 
 Pin discipline:
 
@@ -28,17 +27,6 @@ import re
 
 import pytest
 
-import kafka_connect_oss_spark.registry_llm  # noqa: F401 (registers entries)
-import kafka_connect_oss_spark.registry_multimodal  # noqa: F401
-import kafka_connect_oss_spark.registry_relational  # noqa: F401
-import kafka_connect_oss_spark.registry_seated  # noqa: F401
-import kafka_connect_oss_spark.registry_seated_r12  # noqa: F401
-import kafka_connect_oss_spark.registry_seated_r13  # noqa: F401
-import kafka_connect_oss_spark.registry_seated_r14  # noqa: F401
-import kafka_connect_oss_spark.registry_seated_r15  # noqa: F401
-import kafka_connect_oss_spark.registry_seated_r16  # noqa: F401
-import kafka_connect_oss_spark.registry_seated_r17  # noqa: F401
-import kafka_connect_oss_spark.registry_tpch  # noqa: F401
 from kafka_connect_oss_spark.registry import QUERIES
 
 #: name -> pinned plan properties. max_exchanges counts shuffle
@@ -46,7 +34,7 @@ from kafka_connect_oss_spark.registry import QUERIES
 #: one_scan_of lists table names whose parquet files may be scanned at
 #: most once (the "ONE corpus scan" claims).
 PINS: dict[str, dict] = {
-    # TPC-H showcase rows (PLANS.md Check lines)
+    # TPC-H showcase rows
     "q1_pricing_summary": {
         "max_exchanges": 1, "require": ["PushedFilters: ["]},
     "q3_shipping_priority": {
@@ -58,7 +46,7 @@ PINS: dict[str, dict] = {
         "require": ["BroadcastHashJoin", "PushedFilters: ["]},
     # r17: the two countDistincts became a two-level aggregate, so the
     # Expand node (3x row replication into the first shuffle) is gone
-    # and now FORBIDDEN — plans/r17/q21_waiting_suppliers_{before,after}
+    # and now FORBIDDEN
     "q21_waiting_suppliers": {
         "max_exchanges": 3,
         "require": ["TakeOrderedAndProject", "BroadcastHashJoin"],
@@ -152,16 +140,15 @@ PINS: dict[str, dict] = {
     # r17 (48afd53) unstaged the capped posting frame: the df-count
     # Exchange that ran in the staged job is now inline (the cap's
     # semi-join broadcasts, so the index groupBy pays its own), 2 -> 3;
-    # the count+index chain runs in one job instead of two (PLANS.md)
+    # the count+index chain runs in one job instead of two
     "dedup_containment_pairs": {"max_exchanges": 3},
     "dedup_lsh_recall_eval": {"max_exchanges": 3},
     "dedup_multi_signal": {"max_exchanges": 4},
     # r17 CC rewrite: the min-label loop runs over the rep-pair
-    # subgraph only (one round fewer, clone mass out of every round —
-    # plans/r17/cc_round_{before,after}.txt); the member-attach chain
-    # (identity groups + one rep-keyed label join) moved INTO the final
-    # consumer plan, 2 -> 3 Exchanges here while the loop-phase jobs
-    # shrank (PLANS.md)
+    # subgraph only (one round fewer, clone mass out of every round);
+    # the member-attach chain (identity groups + one rep-keyed label
+    # join) moved INTO the final consumer plan, 2 -> 3 Exchanges here
+    # while the loop-phase jobs shrank
     "dedup_clusters": {"max_exchanges": 3},
     "corpus_leakage_safe_split": {"max_exchanges": 3},
     # iteration flatness: 5 unrolled pagerank rounds = 5 dst-key
@@ -256,7 +243,7 @@ PINS: dict[str, dict] = {
     # member-attach identity keying + the corpus count (the rep labels
     # themselves are checkpointed — Scan ExistingRDD). r17 CC rewrite:
     # 5 -> 6 Exchanges — the attach chain moved into the final plan
-    # while the loop phase shrank (see dedup_clusters pin + PLANS.md)
+    # while the loop phase shrank (see the dedup_clusters pin)
     "dedup_cluster_stats": {
         "max_exchanges": 6,
         "require": ["Scan ExistingRDD", "BroadcastNestedLoopJoin"],
@@ -281,7 +268,7 @@ PINS: dict[str, dict] = {
     # r14 second batch: the next tier of the sf0.1 cost ranking, pinned
     # at their measured shapes so an edit that adds a shuffle or
     # re-scans a staged frame fails CI (streaming rows excluded — see
-    # the STAGED_PINS note).
+    # the note above _EXCHANGE).
     # takedown seeds -> exact-dup digests -> shingle near-dup -> union;
     # the candidate joins broadcast the (small) takedown frontier.
     # r17: the works frame, the corpus digest/rep frame and the works
@@ -290,8 +277,7 @@ PINS: dict[str, dict] = {
     # re-aggregated per consumer) — every documents scan now lives
     # inside a one-shot staged materialization, so the consumer plan
     # pins to ZERO direct parquet scans (and the PushedFilters marker
-    # moved inside the staged subplans with them);
-    # plans/r17/dedup_takedown_expansion_{before,after}.txt
+    # moved inside the staged subplans with them)
     "dedup_takedown_expansion": {
         "max_exchanges": 10,
         "require": ["Scan ExistingRDD", "BroadcastHashJoin"],
@@ -337,7 +323,7 @@ PINS: dict[str, dict] = {
         "require": ["Scan ExistingRDD", "BroadcastHashJoin"]},
     # r15 batch: the next cost tier of BENCH_SF1_r15's unpinned rows,
     # pinned at their measured shapes (streaming rows stay unpinned —
-    # lazy sink reads, the r13 ADVICE 3 rationale).
+    # lazy sink reads, see the note above _EXCHANGE).
     # norm-bucketed cosine candidate pairs: banded join broadcast, the
     # per-pair verify on candidates only; four embeddings branches
     # (norms + both pair sides + verify)
@@ -385,17 +371,13 @@ PINS: dict[str, dict] = {
         "scan_ceilings": {"documents": 2, "embeddings": 2}},
 }
 
-#: next staging cohort's pins land here pre-seating (the parametrize
-#: below unions both dicts; move into PINS with the seating). Every
-#: streaming golden cohort (r15: asof/incremental-dedup; r16:
-#: sessionize/windowed-topk; r17 staged: ingest-qc/drift-monitor) is
-#: deliberately unpinned — each row returns a lazy read of the sink
-#: its streaming pipeline just wrote, so a plan pin would re-run the
-#: whole pipeline only to assert the trivial scan-the-sink plan (the
-#: r13 ADVICE 3 rationale); their guarantees are the oracle equalities
-#: plus the load-bearing pins in their test_staged_seats_r1N modules
-#: (cross-batch cut / fold-ablation / batches-distinguishable).
-STAGED_PINS: dict[str, dict] = {}
+# the streaming rows (registry_streaming.py) are deliberately
+# unpinned — each returns a lazy read of the sink its streaming
+# pipeline just wrote, so a plan pin would re-run the whole pipeline
+# only to assert the trivial scan-the-sink plan; their guarantees are
+# the oracle equalities plus the load-bearing pins in
+# tests/test_registry_streaming.py (cross-batch cut, fold ablation,
+# distinguishable batches).
 
 _EXCHANGE = re.compile(r"^\(\d+\) Exchange$", re.M)
 
@@ -405,11 +387,7 @@ def _plan(spark, name: str, sf_dir: str) -> str:
     # substituted into this plan by the session-global CacheManager,
     # changing Exchange counts (observed with a module-scoped .cache())
     spark.catalog.clearCache()
-    if name in QUERIES:
-        df = QUERIES[name](spark, sf_dir)
-    else:
-        from kafka_connect_oss_spark.registry import staged_queries
-        df = staged_queries()[name](spark, sf_dir)
+    df = QUERIES[name](spark, sf_dir)
     jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted")
     return df._jdf.queryExecution().explainString(jmode)
@@ -420,16 +398,16 @@ def _plan(spark, name: str, sf_dir: str) -> str:
 PIN_SF = "sf0.001"
 
 
-@pytest.mark.parametrize("name", sorted(PINS) + sorted(STAGED_PINS))
+@pytest.mark.parametrize("name", sorted(PINS))
 def test_plan_pins(name, spark, sf_dir):
-    pin = PINS.get(name) or STAGED_PINS[name]
+    pin = PINS[name]
     plan = _plan(spark, name, sf_dir)
     if sf_dir.rstrip("/").endswith(PIN_SF):
         n_ex = len(_EXCHANGE.findall(plan))
         assert n_ex <= pin["max_exchanges"], (
             f"{name}: {n_ex} shuffle Exchanges (pinned ceiling "
             f"{pin['max_exchanges']}) — an edit added a shuffle; if the "
-            f"new plan is intentional, update the pin AND PLANS.md "
+            f"new plan is intentional, update the pin and its comment "
             f"together")
     for marker in pin.get("require", ()):
         assert marker in plan, f"{name}: lost pinned plan marker {marker!r}"

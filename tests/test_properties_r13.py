@@ -1,6 +1,6 @@
-"""Hypothesis properties for the staged r13 TPC-H stand-ins, checked
+"""Hypothesis properties for the Q2/Q11 TPC-H stand-ins, checked
 against an INDEPENDENT pure-Python reference on randomized mini
-schemas. The DuckDB oracle parity in test_staged_seats_r13 proves the
+schemas. The DuckDB oracle parity in test_oracle_parity proves the
 Spark and SQL expressions agree; this file guards against a
 misconception SHARED by both (wrong threshold algebra, min over the
 wrong supplier set, a dropped tie) by re-deriving the answer from
@@ -19,7 +19,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from kafka_connect_oss_spark import registry_staged_r13 as S13
+from kafka_connect_oss_spark import registry_tpch as TPCH
 
 # nation key -> (name, region key); regions 0=EUROPE, 1=ASIA.
 # NATION_3 / NATION_7 are in the q11 group (_Q11_NATIONS), NATION_2 /
@@ -91,7 +91,7 @@ def _py_q2(sups, parts, lines):
     out = set()
     for (p, s), c in supply.items():
         if s in eu and c == mincost[p] \
-                and parts[p - 1] in S13._Q2_SIZES:
+                and parts[p - 1] in TPCH._Q2_SIZES:
             nk, bal = sups[s - 1]
             out.add((float(bal), f"SUP_{s}", _NATIONS[nk][0], p,
                      f"B{p - 1}", f"T{p - 1}", c))
@@ -100,7 +100,7 @@ def _py_q2(sups, parts, lines):
 
 def _py_q11(sups, parts, lines):
     grp = {i + 1 for i, (nk, _) in enumerate(sups)
-           if _NATIONS[nk][0] in S13._Q11_NATIONS}
+           if _NATIONS[nk][0] in TPCH._Q11_NATIONS}
     value = {}
     for p, s, c in lines:
         if s + 1 in grp:
@@ -116,10 +116,8 @@ def test_q2_q11_match_python_reference(spark, tmp_path_factory, data):
     tmp = tmp_path_factory.mktemp("r13prop")
     sups, parts, lines = _materialize(spark, tmp, data)
     got_q2 = {tuple(r) for r in
-              S13.STAGED_QUERIES["q2_min_cost_supplier"](
-                  spark, str(tmp)).collect()}
+              TPCH.q2_min_cost_supplier(spark, str(tmp)).collect()}
     assert got_q2 == _py_q2(sups, parts, lines)
     got_q11 = {tuple(r) for r in
-               S13.STAGED_QUERIES["q11_important_supply"](
-                   spark, str(tmp)).collect()}
+               TPCH.q11_important_supply(spark, str(tmp)).collect()}
     assert got_q11 == _py_q11(sups, parts, lines)

@@ -1,7 +1,7 @@
-"""Hypothesis properties for the r15-staged incremental-dedup oracle
-mirror, checked three ways on randomized mini corpora: the Spark
-operator (dedup.incremental_dedup_status), the DuckDB CTE mirror the
-staged oracle is built from (registry_staged_r15._classify_sql), and
+"""Hypothesis properties for the incremental-dedup oracle mirror,
+checked three ways on randomized mini corpora: the Spark operator
+(dedup.incremental_dedup_status), the DuckDB CTE mirror the streaming
+oracle is built from (registry_streaming._classify_sql), and
 an INDEPENDENT pure-Python reference derived from first principles
 (raw-shingle sets, not the engines' shared hash chain). The parity
 tests prove Spark and DuckDB agree; this file guards against a
@@ -22,7 +22,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from kafka_connect_oss_spark import registry_staged_r15 as S15
+from kafka_connect_oss_spark import registry_streaming as RS
 from kafka_connect_oss_spark.operators import dedup
 
 _WORDS = ["alpha", "beta", "gamma", "delta"]
@@ -95,15 +95,15 @@ def test_incremental_status_three_way(spark, tmp_path_factory, docs):
         df.where(F.col("doc_id") % 2 == 1)).collect()}
     assert got_spark == expect, f"spark vs reference: {texts}"
 
-    # 2) the DuckDB CTE mirror the staged r15 oracle composes
+    # 2) the DuckDB CTE mirror the streaming oracle composes
     sql = f"""WITH d AS (
-        SELECT doc_id, md5(text) AS dg, {S15._OHH} AS hh FROM documents),
+        SELECT doc_id, md5(text) AS dg, {RS._OHH} AS hh FROM documents),
     base AS (SELECT * FROM d WHERE doc_id % 2 = 0),
     inc AS (SELECT * FROM d WHERE doc_id % 2 = 1),
     s_dig AS (SELECT dg, MIN(doc_id) AS rep FROM base GROUP BY dg),
     s_rep AS (SELECT b.doc_id, b.hh FROM base b JOIN s_dig r
               ON b.doc_id = r.rep),
-    {S15._classify_sql('inc', 's_dig', 's_rep')}
+    {RS._classify_sql('inc', 's_dig', 's_rep')}
     SELECT doc_id, status FROM inc_status"""
     con = duckdb.connect()
     try:

@@ -1,7 +1,7 @@
-"""Hypothesis properties for the r16-staged streaming rows, checked
-three ways on randomized mini event logs: the ACTUAL staged row (the
+"""Hypothesis properties for the sessionize/top-k streaming rows,
+checked three ways on randomized mini event logs: the ACTUAL row (the
 full replay harness — mid-group cut, sentinel flush, state machine),
-the DuckDB oracle string it will register with, and an INDEPENDENT
+the DuckDB oracle string it registers with, and an INDEPENDENT
 pure-Python reference derived from first principles. The parity tests
 prove Spark and DuckDB agree on the synthetic tables; this file guards
 against a misconception SHARED by both — an exclusive gap boundary, a
@@ -21,10 +21,11 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from kafka_connect_oss_spark import registry_staged_r16 as S16
+from kafka_connect_oss_spark import registry_streaming as RS
+from kafka_connect_oss_spark.registry import ORACLES
 
 _T0 = datetime.datetime(2024, 1, 1, 0, 0)
-_GAP_US = S16._SESS_GAP_MS * 1000
+_GAP_US = RS._SESS_GAP_MS * 1000
 
 #: an event log: (user 1..3, minute offset 0..150) pairs — offsets span
 #: multiple hourly windows and straddle the 30-min gap both ways;
@@ -93,17 +94,16 @@ def test_sessionize_three_way(spark, tmp_path_factory, pairs):
     _write_events(spark, tmp, pairs)
     expect = _ref_sessions(pairs)
 
-    # 1) the staged streaming row end-to-end (cut + sentinel + state)
+    # 1) the streaming row end-to-end (cut + sentinel + state)
     got_stream = {(r.user_id, r.session_start_us, r.session_end_us,
                    r.n_events)
-                  for r in S16.STAGED_QUERIES[
-                      "stream_sessionize_batch_equivalence"](
-                          spark, tmp).collect()}
+                  for r in RS.stream_sessionize_batch_equivalence(
+                      spark, tmp).collect()}
     assert got_stream == expect, f"stream vs reference: {pairs}"
 
     # 2) the DuckDB oracle string, verbatim
     got_duck = set(_duck_rows(
-        tmp, S16.STAGED_ORACLES["stream_sessionize_batch_equivalence"]))
+        tmp, ORACLES["stream_sessionize_batch_equivalence"]))
     assert got_duck == expect, f"duckdb vs reference: {pairs}"
 
 
@@ -132,17 +132,16 @@ def _ref_topk(rows, k=3):
 def test_windowed_topk_three_way(spark, tmp_path_factory, pairs):
     tmp = str(tmp_path_factory.mktemp("topkprop"))
     rows = _write_events(spark, tmp, pairs)
-    expect = _ref_topk(rows, k=S16._TOPK_K)
+    expect = _ref_topk(rows, k=RS._TOPK_K)
 
     got_stream = {(r.window_start_us, r.event_type, r.user_id,
                    r.n_events, r.rank)
-                  for r in S16.STAGED_QUERIES[
-                      "stream_windowed_topk_batch_equivalence"](
-                          spark, tmp).collect()}
+                  for r in RS.stream_windowed_topk_batch_equivalence(
+                      spark, tmp).collect()}
     assert got_stream == expect, f"stream vs reference: {pairs}"
 
     got_duck = set(_duck_rows(
-        tmp, S16.STAGED_ORACLES["stream_windowed_topk_batch_equivalence"]))
+        tmp, ORACLES["stream_windowed_topk_batch_equivalence"]))
     assert got_duck == expect, f"duckdb vs reference: {pairs}"
 
 

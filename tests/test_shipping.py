@@ -7,6 +7,8 @@ imported. None of them time anything.
 """
 
 import importlib
+import os
+import subprocess
 import sys
 import zipfile
 import zipimport
@@ -160,3 +162,19 @@ def test_reused_worker_task_rereads_no_archive(spark):
     assert later, f"no worker ran a second task: {seen}"
     assert all(r.installed for r in seen), seen
     assert [r.reads for r in later] == [0], seen
+
+
+def test_package_zip_removed_at_exit():
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c",
+         "from kafka_connect_oss_spark import shipping\n"
+         "import os\n"
+         "path = shipping._build_zip()\n"
+         "assert os.path.getsize(path) > 0\n"
+         "print(path)\n"],
+        cwd=repo, capture_output=True, text=True, timeout=120)
+    assert proc.returncode == 0, proc.stderr
+    path = proc.stdout.strip().splitlines()[-1]
+    assert path.endswith(".zip")
+    assert not os.path.exists(path), f"{path} left behind after exit"
