@@ -369,7 +369,7 @@ def events_top_users_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sessions_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization, batch form (gap = 30 min): the
     window-function equivalent of streaming/analytics.sessionize
-    (applyInPandasWithState), which test_streaming_analytics golden-checks
+    (native session_window), which test_streaming_analytics golden-checks
     against this exact shape. One shuffle on user_id; both window specs
     share the (user_id, ts) sort."""
     from pyspark.sql import Window

@@ -28,10 +28,8 @@ from kafka_connect_oss_spark.operators import text as TXT
 from kafka_connect_oss_spark.registry import register
 from kafka_connect_oss_spark.sources.batch import load_table
 from kafka_connect_oss_spark.streaming.replay import (
-    drop_labeled_chunks as _drop_labeled_chunks,
-    drop_single_file as _drop_single_file,
     ephemeral_out_dir as _ephemeral_out_dir,
-    pin_time_order as _pin_time_order,
+    replay_chunks as _replay_chunks,
     require_nodata_microbatches as _require_nodata_microbatches,
 )
 
@@ -61,33 +59,21 @@ def stream_cms_batch_equivalence(spark: SparkSession,
     the equivalence property is what lets a 100 TB ingest keep running
     token frequencies without ever rebuilding from the corpus.
 
-    Harness note: the chunk files land in ONE write job via
-    replay.drop_labeled_chunks (a per-chunk coalesce(1) write would cost
-    its own job + parquet commit of pure fixed latency), and the replay
-    order is mtime-PINNED instead of resting on copy-order mtimes. The
-    merged cells are chunking-order-invariant anyway (cell-wise sums
-    commute), so the pin hardens only the batch_id -> chunk mapping,
-    not the result."""
+    Harness note: replay.replay_chunks drops the chunk files in ONE write
+    job and mtime-PINS their replay order. The merged cells are
+    chunking-order-invariant anyway (cell-wise sums commute), so the pin
+    hardens only the batch_id -> chunk mapping, not the result."""
     from kafka_connect_oss_spark.streaming import analytics as A
 
     workdir = tempfile.mkdtemp(prefix="kafka_connect_oss_spark_cms_eq_")
     try:
         docs = load_table(spark, sf_dir, "documents")
-        chunk_dir = f"{workdir}/chunks"
-        os.makedirs(chunk_dir)
         # label = c{doc_id % N} (a row whose label is not a listed
         # name — impossible for non-negative ids — would be dropped)
-        lab = docs.withColumn(
-            "chunk", F.concat(F.lit("c"), (F.col("doc_id")
-                                           % _CMS_STREAM_CHUNKS)
-                              .cast("string")))
-        present = _drop_labeled_chunks(
-            lab, "chunk", [f"c{i}" for i in range(_CMS_STREAM_CHUNKS)],
-            workdir, chunk_dir)
-        _pin_time_order(chunk_dir, present)
-        schema = lab.drop("chunk").schema
-        sdf = (spark.readStream.schema(schema)
-               .option("maxFilesPerTrigger", "1").parquet(chunk_dir))
+        sdf = _replay_chunks(
+            docs, F.concat(F.lit("c"), (F.col("doc_id") % _CMS_STREAM_CHUNKS)
+                           .cast("string")),
+            [f"c{i}" for i in range(_CMS_STREAM_CHUNKS)], workdir)
         q = A.run_cms_monitor(sdf, f"{workdir}/out", f"{workdir}/ck")
         q.awaitTermination()
         merged = SK.cms_merge(spark.read.parquet(f"{workdir}/out"))
@@ -164,25 +150,15 @@ def stream_asof_batch_equivalence(spark: SparkSession,
         sent = spark.createDataFrame(
             [(-1, stats["maxts"] + datetime.timedelta(hours=1), -1, 0)],
             "user_id long, ts timestamp, event_id long, side int")
-        labeled = (base.withColumn("chunk", F.when(
-                       F.col("ts") < F.lit(stats["cut"]),
-                       F.lit("c1")).otherwise(F.lit("c2")))
-                   .unionByName(sent.withColumn("chunk", F.lit("c2"))))
-
-        chunk_dir = f"{workdir}/chunks"
-        os.makedirs(chunk_dir)
-        # single-job chunk drop; an all-one-timestamp corpus leaves c1
-        # empty (ts < median never holds) and replays as one batch
-        present = _drop_labeled_chunks(labeled, "chunk", ["c1", "c2"],
-                                       workdir, chunk_dir)
-        # Spark's file source schedules files oldest-mtime-first; pin
-        # the chunk order instead of resting on copy-order mtimes: an
-        # mtime tie between c1/c2 could replay c2 first, making every
-        # c1 row late against c2's watermark
-        _pin_time_order(chunk_dir, present)
-
-        sdf = (spark.readStream.schema(labeled.drop("chunk").schema)
-               .option("maxFilesPerTrigger", "1").parquet(chunk_dir))
+        # the sentinel's ts is past the cut, so it rides in c2; an
+        # all-one-timestamp corpus leaves c1 empty (ts < median never
+        # holds) and replays as one batch. The pinned mtime order keeps
+        # c1 first: replayed second, every c1 row would be late against
+        # c2's watermark
+        sdf = _replay_chunks(
+            base.unionByName(sent),
+            F.when(F.col("ts") < F.lit(stats["cut"]), "c1").otherwise("c2"),
+            ["c1", "c2"], workdir)
         j = A.streaming_asof_join(sdf.where(F.col("side") == 1),
                                   sdf.where(F.col("side") == 0),
                                   key_col="user_id",
@@ -331,29 +307,20 @@ def stream_incremental_dedup_refresh(spark: SparkSession,
             docs.where(F.col("doc_id") % _STREAM_SPLIT_MOD == 0),
             f"{db}.s", n_buckets=4)
 
-        chunk_dir = f"{workdir}/chunks"
-        os.makedirs(chunk_dir)
-
-        def drop_chunk(i: int) -> None:
-            _drop_single_file(
-                docs.where(F.col("doc_id") % _STREAM_SPLIT_MOD == i),
-                workdir, chunk_dir, f"c{i}")
-
-        drop_chunk(1)
-        schema = spark.read.parquet(chunk_dir).schema
         out = _ephemeral_out_dir("kafka_connect_oss_spark_iid_out_")
-        ck = f"{workdir}/ck"
 
-        def run_epoch() -> None:
-            sdf = (spark.readStream.schema(schema)
-                   .option("maxFilesPerTrigger", "1").parquet(chunk_dir))
-            q = A.run_incremental_dedup(sdf, f"{db}.s", out, ck,
-                                        refresh_state=True)
+        def run_epoch(i: int) -> None:
+            # chunk c{i} lands next to the earlier chunks; the stream
+            # restarts from the checkpoint and reads only the new file
+            sdf = _replay_chunks(
+                docs.where(F.col("doc_id") % _STREAM_SPLIT_MOD == i),
+                F.lit(f"c{i}"), [f"c{i}"], workdir)
+            q = A.run_incremental_dedup(sdf, f"{db}.s", out,
+                                        f"{workdir}/ck", refresh_state=True)
             q.awaitTermination()
 
-        run_epoch()        # epoch 1: batch 0 = the %3==1 chunk
-        drop_chunk(2)
-        run_epoch()        # epoch 2 (checkpoint resume): batch 1
+        run_epoch(1)       # epoch 1: batch 0 = the %3==1 chunk
+        run_epoch(2)       # epoch 2 (checkpoint resume): batch 1
 
         # the sink outlives workdir (atexit-cleaned), so the return is
         # a LAZY parquet read — no result-sized driver collect
@@ -445,25 +412,18 @@ def _window_cut_ts(ev: DataFrame):
     return (row[0]["cut"], row[0]["maxts"]) if row else (None, None)
 
 
-def _drop_cut_chunks_with_sentinel(df: DataFrame, cut, sent: DataFrame,
-                                   workdir: str, chunk_dir: str):
-    """Split the replay at `cut` into two globally time-ordered
-    micro-batch files (everything before the cut, then the rest; with
-    no cut, one real batch), with the sentinel row riding INSIDE the
-    final chunk file — it only has to be processed with-or-after every
-    real row for the flush argument to hold, and merging it saves one
-    whole micro-batch of fixed overhead. All
-    chunks land in ONE write job (replay.drop_labeled_chunks) and the
-    replay order is mtime-pinned. Returns the chunk row schema for
-    readStream (saves the schema-inference read of the files)."""
-    names = ["c1", "c2"] if cut is not None else ["c1"]
-    chunk = (F.when(F.col("ts") < F.lit(cut), "c1").otherwise("c2")
-             if cut is not None else F.lit("c1"))
-    lab = (df.withColumn("chunk", chunk)
-           .unionByName(sent.withColumn("chunk", F.lit(names[-1]))))
-    present = _drop_labeled_chunks(lab, "chunk", names, workdir, chunk_dir)
-    _pin_time_order(chunk_dir, present)
-    return lab.drop("chunk").schema
+def _cut_chunk(cut):
+    """Chunk label of a replay split at ``cut`` into two globally
+    time-ordered micro-batch files (everything before the cut, then the
+    rest; with no cut, one real batch), and the label names in replay
+    order. The caller's sentinel, later than every real row, lands in
+    the final file: it only has to be processed with-or-after every real
+    row for the flush argument to hold, and riding inside that file
+    saves one whole micro-batch of fixed overhead."""
+    if cut is None:
+        return F.lit("c1"), ["c1"]
+    return (F.when(F.col("ts") < F.lit(cut), "c1").otherwise("c2"),
+            ["c1", "c2"])
 
 
 # the gaps-and-islands SQL — the same shape the sessions_per_user
@@ -496,34 +456,31 @@ ORDER BY user_id, session_start_us"""
 @register("stream_sessionize_batch_equivalence", _SESSIONIZE_ORACLE)
 def stream_sessionize_batch_equivalence(spark: SparkSession,
                                         sf_dir: str) -> DataFrame:
-    """Streaming sessionization (applyInPandasWithState, 30-min gap,
-    event-time timeouts) proven cell-for-cell equal to batch
+    """Streaming sessionization (native session_window, 30-min gap,
+    append mode under the watermark) proven cell-for-cell equal to batch
     gaps-and-islands sessionization, replayed as two time-ordered
     micro-batches CUT MID-SESSION (_session_cut_ts — so the attested
     state provably survives a batch boundary) with a session_flush_ts
     sentinel under the reserved SESSION_FLUSH_USER key riding in the
     final chunk (processed with-or-after every real row, which is all
     the flush argument needs). The sentinel advances the
-    final watermark past every open session's last+gap timeout, so ALL
+    final watermark past every open session's last+gap end, so ALL
     real sessions emit (append-mode withholding, the reason the pytest
     only asserts subset+coverage, is exactly what the sentinel
     discharges); the sentinel's own open session is the only one
     withheld and its key is filtered at the end.
 
-    Scale note: state per user is one (start, last, count) triple,
-    evicted at timeout — a 100 TB stream's state is bounded by the
-    number of users concurrently inside the watermark horizon, never
-    by history length. Reference parity: the per-writer state tuple
-    the reference keeps per partition (TopicPartitionWriter.java:63-87)
-    maps onto exactly this (key -> state row, timeout) shape."""
+    Scale note: state per user is its open session windows (start,
+    end, min/max ts, count), evicted once the watermark passes a
+    session's end — a 100 TB stream's state is bounded by the number
+    of users concurrently inside the watermark horizon, never by
+    history length."""
     from kafka_connect_oss_spark.streaming import analytics as A
 
     _require_nodata_microbatches(spark, "stream_sessionize_batch_equivalence")
     workdir = tempfile.mkdtemp(prefix="kafka_connect_oss_spark_sess_")
     try:
         ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
-        chunk_dir = f"{workdir}/chunks"
-        os.makedirs(chunk_dir)
         # one prep collect: the cut search carries maxts with it
         cut, maxts = _session_cut_ts(ev)
         sent = spark.createDataFrame(
@@ -531,10 +488,7 @@ def stream_sessionize_batch_equivalence(spark: SparkSession,
               A.session_flush_ts(maxts, gap_ms=_SESS_GAP_MS,
                                  watermark_delay_ms=_SESS_WATERMARK_MS))],
             "user_id long, ts timestamp")
-        schema = _drop_cut_chunks_with_sentinel(
-            ev, cut, sent, workdir, chunk_dir)
-        sdf = (spark.readStream.schema(schema)
-               .option("maxFilesPerTrigger", "1").parquet(chunk_dir))
+        sdf = _replay_chunks(ev.unionByName(sent), *_cut_chunk(cut), workdir)
         out = _ephemeral_out_dir("kafka_connect_oss_spark_sess_out_")
         q = (A.sessionize(sdf, gap_ms=_SESS_GAP_MS,
                           watermark=_SESS_WATERMARK)
@@ -607,8 +561,6 @@ def stream_windowed_topk_batch_equivalence(spark: SparkSession,
     try:
         ev = load_table(spark, sf_dir, "events").select(
             "ts", "event_type", "user_id")
-        chunk_dir = f"{workdir}/chunks"
-        os.makedirs(chunk_dir)
         # one prep collect: the cut search carries maxts with it
         cut, maxts = _window_cut_ts(ev)
         # gap = the window length and delay = the stream's watermark, so
@@ -619,10 +571,7 @@ def stream_windowed_topk_batch_equivalence(spark: SparkSession,
                                  watermark_delay_ms=_TOPK_WATERMARK_MS),
               "sentinel", -1)],
             "ts timestamp, event_type string, user_id long")
-        schema = _drop_cut_chunks_with_sentinel(
-            ev, cut, sent, workdir, chunk_dir)
-        sdf = (spark.readStream.schema(schema)
-               .option("maxFilesPerTrigger", "1").parquet(chunk_dir))
+        sdf = _replay_chunks(ev.unionByName(sent), *_cut_chunk(cut), workdir)
         out = _ephemeral_out_dir("kafka_connect_oss_spark_wtopk_out_")
         q = A.run_windowed_topk(sdf, out, f"{workdir}/ck", k=_TOPK_K,
                                 window=_TOPK_WINDOW,
@@ -649,21 +598,6 @@ _QC_PREDS = ["doc_id % 4 = 0", "doc_id % 4 <> 0"]
 #: two DIFFERENT snapshots scored against ONE fixed baseline
 _DRIFT_BASE_PRED = "doc_id % 2 = 0"
 _DRIFT_ARRIVAL_PREDS = ["doc_id % 4 = 1", "doc_id % 4 = 3"]
-
-
-def _stream_chunks(spark: SparkSession, df: DataFrame, chunk_expr,
-                   names: list[str], workdir: str) -> DataFrame:
-    """Drop df into one time-ordered micro-batch file per chunk label
-    (ONE write job) and return the readStream over them. No sentinel:
-    both monitors are stateless across batches — nothing is withheld
-    at end-of-stream, so there is nothing to flush."""
-    chunk_dir = f"{workdir}/chunks"
-    os.makedirs(chunk_dir)
-    lab = df.withColumn("chunk", chunk_expr)
-    present = _drop_labeled_chunks(lab, "chunk", names, workdir, chunk_dir)
-    _pin_time_order(chunk_dir, present)
-    return (spark.readStream.schema(lab.drop("chunk").schema)
-            .option("maxFilesPerTrigger", "1").parquet(chunk_dir))
 
 
 def _qc_batch_sql(pred: str) -> str:
@@ -719,9 +653,10 @@ def stream_ingest_qc_batch_equivalence(spark: SparkSession,
     workdir = tempfile.mkdtemp(prefix="kafka_connect_oss_spark_qc_")
     try:
         docs = load_table(spark, sf_dir, "documents")
-        sdf = _stream_chunks(
-            spark, docs,
-            F.when(F.expr(_QC_PREDS[0]), "c0").otherwise("c1"),
+        # no sentinel: the monitor is stateless across batches, so
+        # nothing is withheld at end-of-stream
+        sdf = _replay_chunks(
+            docs, F.when(F.expr(_QC_PREDS[0]), "c0").otherwise("c1"),
             ["c0", "c1"], workdir)
         out = _ephemeral_out_dir("kafka_connect_oss_spark_qc_out_")
         q = A.run_ingest_qc(sdf, out, f"{workdir}/ck")
@@ -766,8 +701,8 @@ def stream_drift_monitor_batch_equivalence(spark: SparkSession,
         docs = load_table(spark, sf_dir, "documents")
         docs.where(F.expr(_DRIFT_BASE_PRED)).write.parquet(
             f"{workdir}/baseline")
-        sdf = _stream_chunks(
-            spark, docs.where(~F.expr(_DRIFT_BASE_PRED)),
+        sdf = _replay_chunks(
+            docs.where(~F.expr(_DRIFT_BASE_PRED)),
             F.when(F.expr(_DRIFT_ARRIVAL_PREDS[0]), "c0").otherwise("c1"),
             ["c0", "c1"], workdir)
         out = _ephemeral_out_dir("kafka_connect_oss_spark_drift_out_")

@@ -13,17 +13,24 @@ training-data pipeline needs on top of the ingest path:
                              hash — the streaming form of dedup_exact; state
                              expires with the watermark instead of growing
                              with the corpus.
-  sessionize                 custom stateful operator via
-                             applyInPandasWithState: per-user session
-                             windows with a gap timeout — the pattern to
-                             copy for any operator whose state Spark lacks
-                             (the reference's per-writer state tuple,
+  sessionize                 per-user gap sessions on Spark's native
+                             session_window aggregation; late events inside
+                             the watermark merge into (and bridge) open
+                             sessions.
+  streaming_asof_join        custom stateful operator via
+                             applyInPandasWithState: latest right row at or
+                             before each left row — the pattern to copy for
+                             any operator whose state Spark lacks (the
+                             reference's per-writer state tuple,
                              TopicPartitionWriter.java:63-87, is exactly
                              this shape).
 
-All three scale the same way: state lives in the state store, keyed by
+All of them scale the same way: state lives in the state store, keyed by
 group, partitioned by the shuffle — no driver-side state, no unbounded
-growth (watermark/timeout bounds every map).
+growth (watermark/timeout bounds every map). The ``run_*`` functions wire
+an operator or a per-batch job to a foreachBatch sink; every one starts
+the same availableNow query (``_start_batch_sink``) and the batch_id-keyed
+sinks share one dynamic-partition-overwrite write (``_overwrite_batch``).
 """
 
 from __future__ import annotations
@@ -249,72 +256,6 @@ def streaming_asof_join(left: DataFrame, right: DataFrame,
                 "append", GroupStateTimeout.EventTimeTimeout))
 
 
-SESSION_SCHEMA = StructType([
-    StructField("user_id", LongType()),
-    StructField("session_start", TimestampType()),
-    StructField("session_end", TimestampType()),
-    StructField("n_events", LongType()),
-])
-
-_SESSION_STATE = StructType([
-    StructField("start_us", LongType()),
-    StructField("last_us", LongType()),
-    StructField("n_events", LongType()),
-])
-
-
-def _session_func(gap_ms: int):
-    gap_us = gap_ms * 1000
-
-    def fn(key: tuple, pdfs: Iterator[pd.DataFrame],
-           state: GroupState) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:
-            start_us, last_us, n = state.get
-            state.remove()
-            yield pd.DataFrame({
-                "user_id": [user_id],
-                "session_start": [pd.Timestamp(start_us, unit="us")],
-                "session_end": [pd.Timestamp(last_us, unit="us")],
-                "n_events": [n],
-            })
-            return
-
-        ts_us: list[int] = []
-        for pdf in pdfs:
-            # normalize to ns: Arrow may hand back datetime64[us]
-            ts_us.extend(int(v) // 1000
-                         for v in pdf["ts"].astype("datetime64[ns]")
-                         .astype("int64"))
-        ts_us.sort()
-
-        if state.exists:
-            start_us, last_us, n = state.get
-        else:
-            start_us, last_us, n = ts_us[0], ts_us[0] - gap_us - 1, 0
-
-        closed: list[tuple[int, int, int]] = []
-        for t in ts_us:
-            if n and t - last_us > gap_us:
-                closed.append((start_us, last_us, n))
-                start_us, n = t, 0
-            last_us = t
-            n += 1
-        state.update((start_us, last_us, n))
-        # close the open session `gap` after the last event (event time)
-        state.setTimeoutTimestamp(last_us // 1000 + gap_ms)
-
-        if closed:
-            yield pd.DataFrame({
-                "user_id": [user_id] * len(closed),
-                "session_start": [pd.Timestamp(s, unit="us") for s, _, _ in closed],
-                "session_end": [pd.Timestamp(e, unit="us") for _, e, _ in closed],
-                "n_events": [c for _, _, c in closed],
-            })
-
-    return fn
-
-
 #: reserved key for terminal-flush sentinel events (see session_flush_ts)
 SESSION_FLUSH_USER = -1
 
@@ -352,26 +293,32 @@ def session_flush_ts(last_ts, gap_ms: int = 30 * 60 * 1000,
 
 def sessionize(records: DataFrame, gap_ms: int = 30 * 60 * 1000,
                watermark: str = "2 hours") -> DataFrame:
-    """Per-user session windows (gap timeout) as a custom stateful operator.
+    """Per-user session windows (gap timeout) on Spark's native
+    ``session_window``: a session closes when the event-time watermark
+    passes last event + gap, and an event exactly ``gap`` after the last
+    one stays in the session (the batch rule: break iff the delta
+    strictly exceeds the gap). Because the state store keeps each open
+    session as a window, an event arriving out of order inside the
+    watermark extends the session it falls into, and one that lands
+    within ``gap`` of two open sessions merges them — the batch answer,
+    whatever the arrival order. Returns (user_id, session_start,
+    session_end, n_events) with start/end the first/last event time.
 
-    State per user = (session start, last event, count); a session closes
-    when the event-time watermark passes last event + gap. This is the
-    applyInPandasWithState template for operators Spark lacks: the
-    reference's per-writer state machine (TopicPartitionWriter.java:179-212)
-    maps onto the same (key -> state row, timeout) shape with
-    (topic, partition) keys.
+    The custom-state template (``applyInPandasWithState``) is
+    ``streaming_asof_join``; this operator needs none.
 
     Bounded replays: sessions still open at end-of-stream are withheld by
     append-mode semantics — see ``session_flush_ts`` for the sentinel
     pattern that flushes them.
     """
     return (records
-            .select("user_id", "ts")
             .withWatermark("ts", watermark)
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                _session_func(gap_ms), SESSION_SCHEMA, _SESSION_STATE,
-                "append", GroupStateTimeout.EventTimeTimeout))
+            .groupBy("user_id",
+                     F.session_window("ts", f"{gap_ms} milliseconds"))
+            .agg(F.min("ts").alias("session_start"),
+                 F.max("ts").alias("session_end"),
+                 F.count(F.lit(1)).alias("n_events"))
+            .select("user_id", "session_start", "session_end", "n_events"))
 
 
 def streaming_windowed_counts(records: DataFrame, window: str = "1 hour",
@@ -409,6 +356,28 @@ def topk_of_closed_windows(batch: DataFrame, k: int = 3) -> DataFrame:
             .where(F.col("rank") <= k))
 
 
+def _start_batch_sink(stream: DataFrame, checkpoint: str, sink):
+    """Start ``stream`` as an append-mode availableNow query handing
+    every micro-batch to ``sink(batch, batch_id)`` — the one trigger and
+    checkpoint shape of every ``run_*`` runner below."""
+    return (stream.writeStream.outputMode("append")
+            .option("checkpointLocation", checkpoint)
+            .foreachBatch(sink)
+            .trigger(availableNow=True).start())
+
+
+def _overwrite_batch(df: DataFrame, batch_id: int, path: str,
+                     *part_cols: str) -> None:
+    """Write one micro-batch's rows under ``path/batch_id=N[/...]`` with
+    dynamic partition overwrite: a checkpoint-driven replay of batch N
+    rewrites only its own partitions with the same deterministic rows
+    instead of appending duplicates."""
+    (df.withColumn("batch_id", F.lit(batch_id))
+     .write.mode("overwrite")
+     .option("partitionOverwriteMode", "dynamic")
+     .partitionBy("batch_id", *part_cols).parquet(path))
+
+
 def run_windowed_topk(records: DataFrame, out_path: str,
                       checkpoint: str, k: int = 3, window: str = "1 hour",
                       watermark: str = "2 hours"):
@@ -420,10 +389,7 @@ def run_windowed_topk(records: DataFrame, out_path: str,
         (topk_of_closed_windows(batch, k)
          .write.mode("append").parquet(out_path))
 
-    return (counts.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint)
-            .foreachBatch(sink)
-            .trigger(availableNow=True).start())
+    return _start_batch_sink(counts, checkpoint, sink)
 
 
 def run_incremental_dedup(stream_docs: DataFrame, state_prefix: str,
@@ -494,10 +460,7 @@ def run_incremental_dedup(stream_docs: DataFrame, state_prefix: str,
             # statuses feed two consumers (the sink write + the fold's
             # kept filter): one materialization, GC-released
             status = stage_local(status)
-        (status.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id").parquet(out_path))
+        _overwrite_batch(status, batch_id, out_path)
         if refresh_state:
             kept = batch.join(
                 status.where(F.col("status") == "kept").select(id_col),
@@ -506,10 +469,7 @@ def run_incremental_dedup(stream_docs: DataFrame, state_prefix: str,
                                      kept, text_col, id_col, ngram,
                                      kept_posts=posts)
 
-    return (stream_docs.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint)
-            .foreachBatch(sink)
-            .trigger(availableNow=True).start())
+    return _start_batch_sink(stream_docs, checkpoint, sink)
 
 
 def run_ingest_qc(stream_docs: DataFrame, out_path: str, checkpoint: str,
@@ -560,15 +520,9 @@ def run_ingest_qc(stream_docs: DataFrame, out_path: str, checkpoint: str,
                     fround(F.avg(F.when(F.col("_dup"), 1.0)
                                  .otherwise(0.0)), 4)
                     .alias("exact_dup_rate")))
-        (row.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id").parquet(out_path))
+        _overwrite_batch(row, batch_id, out_path)
 
-    return (stream_docs.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint)
-            .foreachBatch(sink)
-            .trigger(availableNow=True).start())
+    return _start_batch_sink(stream_docs, checkpoint, sink)
 
 
 def run_drift_monitor(stream_docs: DataFrame, baseline_path: str,
@@ -603,16 +557,10 @@ def run_drift_monitor(stream_docs: DataFrame, baseline_path: str,
 
     def sink(batch: DataFrame, batch_id: int) -> None:
         base = batch.sparkSession.read.parquet(baseline_path)
-        rep = drift_report(base, batch, text_col, source_col)
-        (rep.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id").parquet(out_path))
+        _overwrite_batch(drift_report(base, batch, text_col, source_col),
+                         batch_id, out_path)
 
-    return (stream_docs.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint)
-            .foreachBatch(sink)
-            .trigger(availableNow=True).start())
+    return _start_batch_sink(stream_docs, checkpoint, sink)
 
 
 def run_cms_monitor(stream_docs: DataFrame, out_path: str, checkpoint: str,
@@ -648,16 +596,10 @@ def run_cms_monitor(stream_docs: DataFrame, out_path: str, checkpoint: str,
     width = SK.CMS_W if w is None else w
 
     def sink(batch: DataFrame, batch_id: int) -> None:
-        (SK.cms_table(batch, text_col, width)
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id").parquet(out_path))
+        _overwrite_batch(SK.cms_table(batch, text_col, width), batch_id,
+                         out_path)
 
-    return (stream_docs.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint)
-            .foreachBatch(sink)
-            .trigger(availableNow=True).start())
+    return _start_batch_sink(stream_docs, checkpoint, sink)
 
 
 def run_incremental_ivf(stream_emb: DataFrame, centroids: DataFrame,
@@ -703,16 +645,10 @@ def run_incremental_ivf(stream_emb: DataFrame, centroids: DataFrame,
 
     def sink(batch: DataFrame, batch_id: int) -> None:
         assigned = ivf_assign(batch, centroids, vec_col, id_col)
-        (assigned.select(id_col, "cid")
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id", "cid").parquet(out_path))
+        _overwrite_batch(assigned.select(id_col, "cid"), batch_id, out_path,
+                         "cid")
 
-    return (stream_emb.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint)
-            .foreachBatch(sink)
-            .trigger(availableNow=True).start())
+    return _start_batch_sink(stream_emb, checkpoint, sink)
 
 
 def run_ingest_with_blocklist(stream_docs: DataFrame, blocklist_path: str,
@@ -774,20 +710,12 @@ def run_ingest_with_blocklist(stream_docs: DataFrame, blocklist_path: str,
         if audit_path is not None:
             # counts + write share one materialization of the batch
             kept = stage_local(kept)
-        (kept.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id").parquet(out_path))
+        _overwrite_batch(kept, batch_id, out_path)
         if audit_path is not None:
             n_in, n_kept = batch.count(), kept.count()
             row = spark.createDataFrame(
-                [(int(batch_id), n_in, n_kept, n_in - n_kept)],
-                "batch_id long, n_in long, n_kept long, n_removed long")
-            (row.write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("batch_id").parquet(audit_path))
+                [(n_in, n_kept, n_in - n_kept)],
+                "n_in long, n_kept long, n_removed long")
+            _overwrite_batch(row, batch_id, audit_path)
 
-    return (stream_docs.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint)
-            .foreachBatch(sink)
-            .trigger(availableNow=True).start())
+    return _start_batch_sink(stream_docs, checkpoint, sink)

@@ -74,23 +74,13 @@ def require_nodata_microbatches(spark: SparkSession, row: str) -> None:
             "cannot flush the final state")
 
 
-def drop_single_file(df: DataFrame, workdir: str, chunk_dir: str,
-                     name: str) -> None:
-    """Write df as ONE parquet file named {chunk_dir}/{name}.parquet —
-    one file == one micro-batch under maxFilesPerTrigger=1."""
-    part = f"{workdir}/{name}_part"
-    df.coalesce(1).write.parquet(part)
-    shutil.copy(glob.glob(f"{part}/*.parquet")[0],
-                f"{chunk_dir}/{name}.parquet")
-
-
 def drop_labeled_chunks(df: DataFrame, label_col: str, names: list[str],
                         workdir: str, chunk_dir: str) -> list[str]:
     """Write {chunk_dir}/{name}.parquet for every label value of
     ``df[label_col]`` in ONE write job, and return the names that
     materialized, in the given order.
 
-    One ``drop_single_file`` per chunk costs one Spark job + parquet
+    One ``coalesce(1)`` write per chunk costs one Spark job + parquet
     commit each — measured at 1-8 s apiece of pure fixed latency on the
     bench box (r15 VERDICT item 2). Hash-repartitioning on the label
     and writing with ``partitionBy`` gives exactly one file per present
@@ -102,7 +92,7 @@ def drop_labeled_chunks(df: DataFrame, label_col: str, names: list[str],
     returned names."""
     part = f"{workdir}/{label_col}_part"
     (df.repartition(len(names), df[label_col])
-       .write.partitionBy(label_col).parquet(part))
+       .write.mode("overwrite").partitionBy(label_col).parquet(part))
     present = []
     for name in names:
         fs = glob.glob(f"{part}/{label_col}={name}/*.parquet")
@@ -121,7 +111,30 @@ def pin_time_order(chunk_dir: str, names: list[str]) -> None:
     silently dropping them — the r14 ADVICE item 1 hazard, applied
     here to every chunk, not just the sentinel (r15 code-review
     finding)."""
-    t0 = max(os.path.getmtime(f"{chunk_dir}/{n}.parquet") for n in names)
+    t0 = max((os.path.getmtime(f"{chunk_dir}/{n}.parquet") for n in names),
+             default=0.0)
     for i, n in enumerate(names):
         t = t0 + 2.0 * (i + 1)
         os.utime(f"{chunk_dir}/{n}.parquet", (t, t))
+
+
+def replay_chunks(df: DataFrame, chunk, names: list[str],
+                  workdir: str) -> DataFrame:
+    """The replay shape in one call: label ``df``'s rows with the
+    ``chunk`` column expression (values from ``names``), drop one file
+    per label under ``{workdir}/chunks`` in ONE write job
+    (``drop_labeled_chunks``), pin their replay order to ``names``
+    (``pin_time_order``) and return the file stream over them, one
+    micro-batch per file (maxFilesPerTrigger=1), in ``df``'s schema.
+
+    A sentinel row is unioned into ``df`` before the call, its chunk
+    expression picking the final label. Calling again with the same
+    ``workdir`` adds the new chunks next to the earlier ones, so a
+    stream restarted from its checkpoint picks up only the new files."""
+    chunk_dir = f"{workdir}/chunks"
+    os.makedirs(chunk_dir, exist_ok=True)
+    lab = df.withColumn("chunk", chunk)
+    present = drop_labeled_chunks(lab, "chunk", names, workdir, chunk_dir)
+    pin_time_order(chunk_dir, present)
+    return (df.sparkSession.readStream.schema(df.schema)
+            .option("maxFilesPerTrigger", "1").parquet(chunk_dir))

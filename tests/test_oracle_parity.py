@@ -26,12 +26,3 @@ def test_lazy_oracle_parity(name, spark, sf_dir, duck):
     # query's own fit and the oracle's fit must agree bit-for-bit
     df = QUERIES[name](spark, sf_dir)
     compare(df, duck, LAZY_ORACLES[name](sf_dir), name)
-
-
-@pytest.mark.parametrize(
-    "name", sorted(set(QUERIES) - set(ORACLES) - set(LAZY_ORACLES)))
-def test_rows_only(name, spark, sf_dir):
-    # non-SQL-expressible ops: the driver records a rows-only check
-    df = QUERIES[name](spark, sf_dir)
-    assert df.count() >= 0
-    assert len(df.schema.fields) > 0

@@ -1,6 +1,7 @@
-"""Streaming analytics: watermark windowed agg, bounded-state dedup, and the
-applyInPandasWithState sessionizer (streaming/analytics.py), driven by the
-file-source Kafka stand-in and golden-checked against batch equivalents."""
+"""Streaming analytics: watermark windowed agg, bounded-state dedup, the
+session_window sessionizer and the applyInPandasWithState as-of join
+(streaming/analytics.py), driven by the file-source Kafka stand-in and
+golden-checked against batch equivalents."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -133,6 +134,44 @@ def test_sessionize_terminal_flush(spark, sf_dir, tmp_path):
     golden_rows = {(r.user_id, r.session_start, r.session_end, r.n_events)
                    for r in golden.collect()}
     assert got == golden_rows
+
+
+def test_sessionize_out_of_order_arrival(spark, tmp_path):
+    """Events arriving late (inside the watermark) land in the session
+    their event time belongs to, as in the batch answer: user 1's 09:50
+    extends the open [10:00, 10:20] session backwards, and user 2's
+    10:25 bridges its 10:00 and 10:50 sessions into one. Replayed as
+    two chunk files (the late events second) plus the flush sentinel."""
+    import datetime
+
+    from kafka_connect_oss_spark.streaming.replay import (
+        drop_labeled_chunks, pin_time_order)
+
+    gap_ms = 30 * 60 * 1000
+    t = lambda hh, mm: datetime.datetime(2024, 1, 1, hh, mm)  # noqa: E731
+    rows = [(1, t(10, 0), "c1"), (1, t(10, 20), "c1"),
+            (2, t(10, 0), "c1"), (2, t(10, 50), "c1"),
+            (1, t(9, 50), "c2"), (2, t(10, 25), "c2"),
+            (A.SESSION_FLUSH_USER,
+             A.session_flush_ts(t(10, 50), gap_ms=gap_ms), "flush")]
+    names = ["c1", "c2", "flush"]
+    df = spark.createDataFrame(rows, "user_id long, ts timestamp, chunk string")
+    chunk_dir = tmp_path / "chunks"
+    chunk_dir.mkdir()
+    present = drop_labeled_chunks(df, "chunk", names, str(tmp_path),
+                                  str(chunk_dir))
+    assert present == names
+    pin_time_order(str(chunk_dir), names)
+
+    stream = (spark.readStream.schema(df.drop("chunk").schema)
+              .option("maxFilesPerTrigger", "1").parquet(str(chunk_dir)))
+    _run_to_memory(A.sessionize(stream, gap_ms=gap_ms, watermark="2 hours"),
+                   "sessooo", tmp_path)
+    got = {(r.user_id, r.session_start, r.session_end, r.n_events)
+           for r in spark.sql(
+               "SELECT * FROM sessooo WHERE user_id >= 0").collect()}
+    assert got == {(1, t(9, 50), t(10, 20), 3),
+                   (2, t(10, 0), t(10, 50), 3)}, got
 
 
 def test_streaming_range_join_matches_batch(spark, sf_dir, tmp_path):
