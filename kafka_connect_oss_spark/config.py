@@ -108,11 +108,7 @@ class PipelineConfig:
             return {"compression": self.parquet_codec,
                     "parquet.block.size": str(self.parquet_block_size),
                     "parquet.page.size": str(self.parquet_page_size)}
-        if self.format == "json":
-            return {"compression": self.compression}
-        if self.format == "avro":
-            return {"compression": self.avro_codec if self.avro_codec != "null" else "uncompressed"}
-        if self.format == "bytearray":
+        if self.format in ("json", "bytearray"):
             return {"compression": self.compression}
         return {}
 

@@ -4,9 +4,9 @@ reference: AvroRecordWriterProvider.java:60-101 (DataFileWriter +
 GenericDatumWriter, codec from avro.codec via CodecFactory) exercised by
 TestDataWriterAvro.java:110-604 including the codec matrix at :154-167.
 
-Neither the spark-avro connector jar nor fastavro exists in this
-environment, so this module implements the public Avro 1.x specification
-directly (https://avro.apache.org/docs/current/specification/):
+This module is the engine's one Avro path, for writing and reading alike.
+It implements the public Avro 1.x specification directly
+(https://avro.apache.org/docs/current/specification/):
 
 * binary encoding — zigzag varint ints/longs, length-prefixed
   bytes/strings, IEEE-754 little-endian floats, block-encoded arrays/maps,
@@ -28,6 +28,11 @@ distributed too: ``binaryFile`` scan + ``mapInPandas`` decode (the driver
 only peeks one header for the schema). The sync marker derives from
 md5(schema ‖ codec ‖ payload), keeping re-uploads byte-identical — the
 reference's determinism contract (README.md:119-125).
+
+The spark-avro connector is deliberately not used, even where its jar is
+present: it writes through Avro's Java ``DataFileWriter``, which draws a
+random sync marker for every file, so a replayed batch would no longer
+reproduce its objects byte for byte.
 """
 
 from __future__ import annotations
@@ -617,7 +622,8 @@ def _pdf_to_avro_rows(pdf, avro_schema: dict) -> list[dict]:
 def write_staged(df: DataFrame, path: str, codec: str = "null") -> int:
     """Stage `df` (tagged with _file_id) as one avro container per file id:
     <path>/_file_id=<hex>/part-00000.avro — the exact layout
-    sinks._promote_staged expects. Runs on executors via applyInPandas;
+    sinks._promote_staged expects. `path` is a fresh per-commit dir, so
+    nothing needs clearing first. Runs on executors via applyInPandas;
     returns the number of files written."""
     import pandas as pd
 
@@ -639,14 +645,6 @@ def write_staged(df: DataFrame, path: str, codec: str = "null") -> int:
         with fs.open_output_stream(f"{d}/part-00000.avro") as f:
             f.write(data)
         return pd.DataFrame({"file_id": [file_id], "n": [len(rows)]})
-
-    # clear leftover staging (mode=overwrite analog)
-    fs, root = _open_fs(path)
-    try:
-        fs.delete_dir(root)
-    except FileNotFoundError:
-        pass
-    fs.create_dir(root, recursive=True)
 
     done = df.groupBy("_file_id").applyInPandas(
         write_group, "file_id string, n long")
@@ -690,18 +688,3 @@ def read_avro(spark: SparkSession, glob: str) -> DataFrame:
                 yield out.astype(object).where(out.notna(), None)
 
     return files.select("content").mapInPandas(decode, out_schema)
-
-
-def spark_avro_available(spark: SparkSession) -> bool:
-    """True when the 'avro' data source is actually registered (the
-    spark-avro connector jar ships classes AND a DataSourceRegister entry;
-    a bare Class.forName probe false-positives on Spark 4, which bundles
-    the classes but not the registration)."""
-    try:
-        jvm = spark._jvm
-        jvm.org.apache.spark.sql.execution.datasources.DataSource \
-            .lookupDataSource("avro",
-                              jvm.org.apache.spark.sql.internal.SQLConf.get())
-        return True
-    except Exception:
-        return False

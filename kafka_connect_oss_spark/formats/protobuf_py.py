@@ -20,9 +20,9 @@ field specs:
 * unknown-field skipping on decode (forward compatibility).
 
 Spark integration is Arrow-batched pandas UDFs — bytes in/out per record,
-no JVM round-trip, executor-side only. The equivalent Catalyst-native path
-(``from_protobuf``/``to_protobuf``) is used instead when the spark-protobuf
-jar is present; see ``spark_protobuf_available``.
+no JVM round-trip, executor-side only. This is the only protobuf path; the
+Catalyst-native ``from_protobuf``/``to_protobuf`` would need the
+spark-protobuf jar and a compiled descriptor set.
 """
 
 from __future__ import annotations
@@ -304,14 +304,3 @@ def proto_decode_col(spec: tuple[ProtoField, ...]):
         rows = [decode_message(spec, bytes(b)) for b in s]
         return pd.DataFrame(rows, columns=[f.name for f in spec])
     return dec
-
-
-def spark_protobuf_available(spark) -> bool:
-    """True when the spark-protobuf module is usable (from_protobuf)."""
-    try:
-        spark._jvm.java.lang.Class.forName(
-            "org.apache.spark.sql.protobuf.ProtobufDataToCatalyst")
-        from pyspark.sql.protobuf import functions as _  # noqa: F401
-        return True
-    except Exception:
-        return False

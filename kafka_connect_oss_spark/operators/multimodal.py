@@ -16,15 +16,11 @@ Design for 100 TB:
 * frame sampling explodes rows inside the UDF (per-batch), so output size is
   bounded by ``maxRecordsPerBatch`` x frames-per-doc, not by the file size.
 
-The codec step is pluggable: ``decode_real`` carries real decode code
-behind optional imports (Pillow for images, stdlib ``wave`` for WAV audio
-— exercised by an in-sandbox test — PyAV for video) and raises
-``NotImplementedError`` when the library is absent; the oracle-checked
-queries pin ``fake_decode`` — a deterministic md5-based stand-in with the
-same shape (documented per-function) — because the synthetic corpus
-carries text bytes, not media. The Spark-side plumbing — binary columns,
-Arrow batch iteration, UDF signatures, exploded-row schemas — is real and
-tested either way.
+The codec step is ``fake_decode``, a deterministic md5-based stand-in
+(documented per-function) that the DuckDB oracles recompute in SQL: the
+synthetic corpus carries text bytes, not media. The Spark-side plumbing —
+binary columns, Arrow batch iteration, UDF signatures, exploded-row
+schemas — is real and oracle-checked.
 """
 
 from __future__ import annotations
@@ -51,118 +47,6 @@ RESIZE_BOX = 256
 
 #: binary feature-extraction output dimensionality
 EMBED_DIMS = 8
-
-
-def decode_real(modality: str, payload: bytes) -> dict:
-    """Production decode hook (round-7: real code behind optional
-    imports, not a bare stub). Same output shape as ``fake_decode``:
-
-    * image — Pillow (``PIL.Image``), if installed;
-    * audio — WAV container via the stdlib ``wave`` reader (always
-      available; other codecs need soundfile/librosa);
-    * video — PyAV (``av``), if installed.
-
-    Raises ``NotImplementedError`` when the needed codec library is
-    absent or the payload is not parseable by it, so callers can fall
-    back to ``fake_decode`` (the oracle-checked queries pin fake_decode
-    regardless — the synthetic corpus carries text bytes, not media).
-    Skip-gated tests: tests/test_multimodal.py (the spark-avro jar
-    pattern, r06 VERDICT item 8).
-    """
-    import io
-
-    def _image_header_meta(p: bytes):
-        """(fmt, width, height, channels) from the image header,
-        stdlib-only — the metadata this catalog path needs requires no
-        pixel codec. Three public container formats whose headers carry
-        the dimensions in fixed positions:
-
-        * PNG (spec: 8-byte signature, IHDR first chunk; color type
-          0/2/3/4/6 -> 1/3/1/2/4 channels);
-        * BMP ("BM" + BITMAPINFOHEADER: int32-LE width at 18, int32-LE
-          height at 22 — negative height means top-down rows, the
-          magnitude is the pixel height; uint16-LE bit count at 28 ->
-          channels for the common 8/24/32-bit forms);
-        * GIF ("GIF87a"/"GIF89a" + uint16-LE logical-screen size;
-          palette-indexed RGB -> 3 channels).
-
-        Returns None for anything else (r09; PNG-only in r08)."""
-        import struct
-
-        if len(p) >= 26 and p[:8] == b"\x89PNG\r\n\x1a\n" \
-                and p[12:16] == b"IHDR":
-            w, h, _depth, ctype = struct.unpack(">IIBB", p[16:26])
-            channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}.get(ctype)
-            return None if channels is None else ("png", w, h, channels)
-        if len(p) >= 30 and p[:2] == b"BM":
-            w, h = struct.unpack("<ii", p[18:26])
-            bits = struct.unpack("<H", p[28:30])[0]
-            channels = {8: 1, 24: 3, 32: 4}.get(bits)
-            if channels is None or w <= 0 or h == 0:
-                return None
-            return ("bmp", w, abs(h), channels)
-        if len(p) >= 10 and p[:6] in (b"GIF87a", b"GIF89a"):
-            w, h = struct.unpack("<HH", p[6:10])
-            return ("gif", w, h, 3)
-        return None
-
-    meta = {"byte_len": len(payload), "fmt": FORMATS[modality],
-            "width": None, "height": None, "channels": None,
-            "sample_rate": None, "duration_ms": None, "n_frames": None}
-    if modality == "image":
-        try:
-            from PIL import Image
-        except ImportError as ex:
-            hdr = _image_header_meta(payload)
-            if hdr is None:
-                raise NotImplementedError(
-                    "real image decoding requires Pillow (the pure-"
-                    "Python fallback reads PNG/BMP/GIF headers only)"
-                ) from ex
-            meta.update(fmt=hdr[0], width=hdr[1], height=hdr[2],
-                        channels=hdr[3])
-            return meta
-        try:
-            with Image.open(io.BytesIO(payload)) as im:
-                meta.update(width=im.width, height=im.height,
-                            channels=len(im.getbands()),
-                            fmt=(im.format or FORMATS[modality]).lower())
-        except Exception as ex:
-            raise NotImplementedError(f"undecodable image: {ex}") from ex
-        return meta
-    if modality == "audio":
-        import wave
-
-        try:
-            with wave.open(io.BytesIO(payload)) as w:
-                sr = w.getframerate()
-                if sr <= 0:
-                    # a zero framerate field is a malformed header, not a
-                    # decodable WAV — keep the documented contract that
-                    # undecodable payloads raise NotImplementedError
-                    # (ZeroDivisionError would escape it; r07 ADVICE)
-                    raise NotImplementedError(
-                        "WAV header declares zero frame rate")
-                meta.update(sample_rate=sr, channels=w.getnchannels(),
-                            duration_ms=w.getnframes() * 1000 // sr,
-                            fmt="wav")
-        except (wave.Error, EOFError) as ex:
-            raise NotImplementedError(
-                f"non-WAV audio requires soundfile/librosa: {ex}") from ex
-        return meta
-    try:
-        import av
-    except ImportError as ex:
-        raise NotImplementedError(
-            "real video decoding requires PyAV") from ex
-    try:
-        with av.open(io.BytesIO(payload)) as container:
-            stream = container.streams.video[0]
-            meta.update(n_frames=stream.frames or sum(
-                1 for _ in container.decode(stream)))
-    except Exception as ex:
-        raise NotImplementedError(f"undecodable video: {ex}") from ex
-    return meta
 
 
 def fake_decode(modality: str, payload: bytes) -> dict:
@@ -249,8 +133,8 @@ _RESIZE_SCHEMA = "doc_id long, width int, height int, new_w int, new_h int"
 
 def image_resize_plan(mm: DataFrame, box: int = RESIZE_BOX) -> DataFrame:
     """Fit-within-box resize plan for image payloads (aspect-preserving,
-    never upscaling). The pixel transform itself is the stubbed codec step
-    (decode_real); the plan math runs on the fake-decoded dimensions."""
+    never upscaling). The plan math runs on the fake-decoded dimensions;
+    the pixel transform itself is out of scope."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -280,9 +164,9 @@ _FRAME_SCHEMA = "doc_id long, frame_idx int, frame_len int, frame_md5 string"
 def video_frame_sample(mm: DataFrame, frame_bytes: int = FRAME_BYTES,
                        stride: int = FRAME_STRIDE) -> DataFrame:
     """Sample every ``stride``-th fixed-size pseudo-frame from video
-    payloads, exploding one row per sampled frame inside the UDF. Real
-    decoders swap byte-slicing for keyframe extraction (decode_real); the
-    exploded-schema plumbing is identical."""
+    payloads, exploding one row per sampled frame inside the UDF. A real
+    decoder would swap byte-slicing for keyframe extraction; the
+    exploded-schema plumbing would stay the same."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -312,7 +196,7 @@ _EMBED_SCHEMA = "doc_id long, " + ", ".join(
 
 def binary_embed(mm: DataFrame, dims: int = EMBED_DIMS) -> DataFrame:
     """Feature-extract an ``dims``-dim vector in [0,1) from each payload —
-    the fake stand-in for a real encoder (CLIP/CLAP/etc., decode_real).
+    the fake stand-in for a real encoder (CLIP/CLAP/etc.).
     v_j = int(md5(payload || str(j))[:8], 16) / 2^32: exactly reproducible
     in SQL, so the Arrow/UDF plumbing is oracle-checked end-to-end."""
 

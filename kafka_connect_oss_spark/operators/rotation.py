@@ -14,7 +14,12 @@ Batch re-expression: rotation is a *segmentation of the offset-ordered record
 sequence per Kafka partition*, which Spark expresses as window functions over
 Window.partitionBy(topic, partition).orderBy(offset) — one sort per Kafka
 partition, embarrassingly parallel across partitions (exactly the reference's
-per-TopicPartitionWriter parallelism), no global shuffle.
+per-TopicPartitionWriter parallelism), no global shuffle. With rotation on,
+the reference's single offset-order walk (TopicPartitionWriter.java:214-285)
+becomes running frames over that one spec: the R2/R3 boundary flag from two
+lags, the segment as a running count of boundaries, the R1 file index from
+the row position since the segment's first row, and the file's start offset
+as the latest offset at which a file began.
 
 R2 comes in two forms: ``assign_files`` uses fixed-grid time buckets
 floor(epoch_ms/interval) — pure window functions, boundaries may differ from
@@ -47,9 +52,9 @@ def assign_files(records: DataFrame, encoded: Column,
       file_idx           — R1 chunk index within the segment (flush.size)
       start_offset       — first offset in the file == the offset the file
                            name carries (TopicPartitionWriter.java:268-285);
-                           skipped when with_start_offset=False (one fewer
-                           window pass — aggregating callers derive it as
-                           min(offset) per file group instead)
+                           skipped when with_start_offset=False
+                           (aggregating callers derive it as min(offset)
+                           per file group instead)
     """
     df = records.withColumn("encoded_partition", encoded)
     w = Window.partitionBy("topic", "partition").orderBy("offset")
@@ -59,22 +64,30 @@ def assign_files(records: DataFrame, encoded: Column,
         # extractor): rotateOnTime fires on interval elapse OR encoded-
         # partition change (TopicPartitionWriter.java:338-346) and
         # commitFiles() closes everything, so files are contiguous runs.
-        df = df.withColumn("_tbucket",
-                           duration_bucket(F.col(ts_col), rotate_interval_ms))
-        boundary = (
-            F.lag("encoded_partition").over(w).isNull()
-            | (F.lag("encoded_partition").over(w) != F.col("encoded_partition"))
-            | (F.lag("_tbucket").over(w) != F.col("_tbucket"))
-        )
-        df = df.withColumn("_boundary", boundary.cast("int"))
+        # Every column below is a running frame over the one spec `w`, so
+        # the cut costs one sort per Kafka partition.
+        run = w.rowsBetween(Window.unboundedPreceding, 0)
+        ep = F.col("encoded_partition")
+        tbucket = duration_bucket(F.col(ts_col), rotate_interval_ms)
+        boundary = (F.lag(ep).over(w).isNull()
+                    | (F.lag(ep).over(w) != ep)
+                    | (F.lag(tbucket).over(w) != tbucket))
+        df = (df.withColumn("_boundary", boundary)
+              .withColumn("_rn", F.row_number().over(w)))
         df = df.withColumn(
             "segment",
-            F.sum("_boundary").over(w.rowsBetween(Window.unboundedPreceding, 0)) - 1,
-        )
-        ws = Window.partitionBy("topic", "partition", "segment").orderBy("offset")
-        df = df.withColumn("file_idx",
-                           F.floor((F.row_number().over(ws) - 1) / flush_size))
-        df = df.drop("_tbucket", "_boundary")
+            F.sum(F.col("_boundary").cast("int")).over(run) - 1)
+        # position within the segment: rows since its first record
+        seg_start = F.max(F.when(F.col("_boundary"), F.col("_rn"))).over(run)
+        df = df.withColumn("_pos", F.col("_rn") - seg_start)
+        df = df.withColumn("file_idx", F.floor(F.col("_pos") / flush_size))
+        if with_start_offset:
+            # a file's first record sits at _pos % flush_size == 0, and
+            # offsets increase along `w`, so the latest such offset is the
+            # current file's start
+            first = F.when(F.col("_pos") % flush_size == 0, F.col("offset"))
+            df = df.withColumn("start_offset", F.max(first).over(run))
+        df = df.drop("_boundary", "_rn", "_pos")
     else:
         # Rotation OFF: encoded-partition change does NOT rotate. One writer
         # per encodedPartition stays open concurrently and a SINGLE
@@ -90,11 +103,10 @@ def assign_files(records: DataFrame, encoded: Column,
             "segment",
             F.floor((F.row_number().over(w) - 1) / flush_size).cast("long"))
         df = df.withColumn("file_idx", F.lit(0).cast("bigint"))
-
-    if with_start_offset:
-        wf = Window.partitionBy("topic", "partition", "encoded_partition",
-                                "segment", "file_idx")
-        df = df.withColumn("start_offset", F.min("offset").over(wf))
+        if with_start_offset:
+            wf = Window.partitionBy("topic", "partition", "encoded_partition",
+                                    "segment", "file_idx")
+            df = df.withColumn("start_offset", F.min("offset").over(wf))
     return df
 
 

@@ -1,8 +1,8 @@
 """Multimodal-column query surface (binary payloads + typed metadata +
 pandas-UDF decode stages; operators/multimodal.py).
 
-Every query's codec stage is the deterministic md5 fake (the real codec is
-stubbed — see operators/multimodal.decode_real), which makes the full
+Every query's codec stage is the deterministic md5 fake
+(operators/multimodal.fake_decode), which makes the full
 mapInPandas pipeline SQL-expressible: each oracle below recomputes the fake
 decode in DuckDB. ``documents.text`` is verified pure-ASCII, so DuckDB
 string functions over ``text`` operate on exactly the bytes Spark sees in

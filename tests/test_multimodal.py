@@ -1,5 +1,5 @@
 """Multimodal-column plumbing: binary payloads, Arrow batch iteration,
-exploded-frame schemas, and the stubbed codec boundary
+exploded-frame schemas and the fake codec stage
 (operators/multimodal.py). Oracle parity runs in test_oracle_parity.py;
 these tests pin the UDF mechanics the oracle can't see."""
 
@@ -22,137 +22,6 @@ def mm(spark, sf_dir):
     # fragments into ANY later matching plan session-wide, which changed
     # other tests' physical plans (caught by test_plan_guards)
     df.unpersist()
-
-
-def test_real_decode_raises_on_missing_codec_or_junk():
-    # junk bytes: every modality raises NotImplementedError, whether the
-    # codec library is absent (import gate) or present (undecodable)
-    for modality in MM.MODALITIES:
-        with pytest.raises(NotImplementedError):
-            MM.decode_real(modality, b"\x89PNG...")
-
-
-def test_real_wav_decode_stdlib():
-    """The audio path is REAL code exercised in-sandbox: stdlib `wave`
-    writes a 16 kHz mono clip, decode_real reads back its metadata."""
-    import io
-    import wave
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(16_000)
-        w.writeframes(b"\x00\x01" * 8_000)  # 8000 frames = 500 ms
-    meta = MM.decode_real("audio", buf.getvalue())
-    assert meta["sample_rate"] == 16_000
-    assert meta["channels"] == 1
-    assert meta["duration_ms"] == 500
-    assert meta["fmt"] == "wav"
-
-
-def _tiny_png(w: int, h: int) -> bytes:
-    """Valid RGB PNG built with stdlib only (zlib IDAT, CRC'd chunks) —
-    the vendored byte fixture that lets the real image-decode path run
-    in-sandbox without Pillow (r07 VERDICT item 8)."""
-    import struct
-    import zlib
-
-    def chunk(typ: bytes, data: bytes) -> bytes:
-        return (struct.pack(">I", len(data)) + typ + data
-                + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF))
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)  # 8-bit RGB
-    raw = b"".join(b"\x00" + b"\x10\x20\x30" * w for _ in range(h))
-    return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b""))
-
-
-def test_real_png_decode_runs_in_sandbox():
-    """decode_real('image', ...) works on PNG bytes with or without
-    Pillow: the IHDR metadata fallback is stdlib-only, and Pillow (when
-    present) must agree on the same fixture."""
-    meta = MM.decode_real("image", _tiny_png(37, 21))
-    assert (meta["width"], meta["height"], meta["channels"]) == (37, 21, 3)
-    assert meta["fmt"] == "png"
-    with pytest.raises(NotImplementedError):
-        MM.decode_real("image", b"not-an-image")
-
-
-def _tiny_bmp(w: int, h: int, bits: int = 24, top_down: bool = False) -> bytes:
-    """Valid uncompressed BMP built with stdlib only (BITMAPINFOHEADER,
-    BI_RGB) — the r09 vendored fixture for the Pillow-absent branch."""
-    import struct
-
-    row = ((w * bits // 8) + 3) & ~3  # rows pad to 4 bytes
-    pixels = b"\x40" * (row * h)
-    info = struct.pack("<IiiHHIIiiII", 40, w, -h if top_down else h,
-                       1, bits, 0, len(pixels), 2835, 2835, 0, 0)
-    header = struct.pack("<2sIHHI", b"BM", 14 + 40 + len(pixels), 0, 0,
-                         14 + 40)
-    return header + info + pixels
-
-
-def _tiny_gif(w: int, h: int) -> bytes:
-    """Valid GIF89a built with stdlib only (2-color palette, minimal
-    LZW-coded single image, trailer)."""
-    import struct
-
-    screen = struct.pack("<HHBBB", w, h, 0x80, 0, 0)  # global 2-color table
-    palette = b"\x00\x00\x00\xff\xff\xff"
-    img = b"," + struct.pack("<HHHHB", 0, 0, w, h, 0)
-    # LZW min code size 2; a single clear+EOI block is a valid (empty)
-    # data stream for header-metadata purposes
-    lzw = b"\x02" + bytes([1, 0x44]) + b"\x00"
-    return b"GIF89a" + screen + palette + img + lzw + b";"
-
-
-def test_real_bmp_gif_decode_runs_in_sandbox():
-    """r09: the stdlib header fallback covers BMP (incl. top-down
-    negative-height and 32-bit forms) and GIF, so the real-decode path
-    exercises three public container formats in-sandbox without Pillow.
-    Pillow (when installed) takes precedence on the same bytes and
-    agrees on dimensions — pinned in test_real_image_decode_pillow's
-    environment."""
-    try:
-        import PIL  # noqa: F401  (Pillow decodes pixels; channel
-        has_pil = True            # conventions differ for palette GIFs)
-    except ImportError:
-        has_pil = False
-
-    meta = MM.decode_real("image", _tiny_bmp(19, 7))
-    assert (meta["fmt"], meta["width"], meta["height"]) == ("bmp", 19, 7)
-    td = MM.decode_real("image", _tiny_bmp(5, 3, bits=32, top_down=True))
-    assert (td["fmt"], td["width"], td["height"]) == ("bmp", 5, 3)
-    gif = MM.decode_real("image", _tiny_gif(41, 13))
-    assert (gif["fmt"], gif["width"], gif["height"]) == ("gif", 41, 13)
-    if not has_pil:  # the fallback's documented channel mapping
-        assert (meta["channels"], td["channels"], gif["channels"]) \
-            == (3, 4, 3)
-        # 16-bit BMP (channel mapping ambiguous) stays undecodable
-        with pytest.raises(NotImplementedError):
-            MM.decode_real("image", _tiny_bmp(4, 4, bits=16))
-
-
-def test_real_image_decode_pillow():
-    """Skip-gated like the spark-avro jar test: runs wherever Pillow is
-    installed (the production escape hatch), skips in this container."""
-    PIL = pytest.importorskip("PIL.Image", reason="Pillow not installed")
-    import io
-
-    buf = io.BytesIO()
-    PIL.new("RGB", (37, 21)).save(buf, format="PNG")
-    meta = MM.decode_real("image", buf.getvalue())
-    assert (meta["width"], meta["height"], meta["channels"]) == (37, 21, 3)
-    assert meta["fmt"] == "png"
-
-
-def test_real_video_decode_pyav():
-    pytest.importorskip("av", reason="PyAV not installed")
-    # a real container is needed to assert more; presence of the import
-    # path is pinned here, undecodable bytes must still raise
-    with pytest.raises(NotImplementedError):
-        MM.decode_real("video", b"not-a-container")
 
 
 def test_attach_binary_types_and_metadata(mm):

@@ -13,7 +13,8 @@ from pyspark.sql import functions as F
 from kafka_connect_oss_spark.functions import partition as P
 from kafka_connect_oss_spark.functions.keys import object_key
 from kafka_connect_oss_spark.operators.rotation import (anchored_interval_files,
-                                                        assign_files)
+                                                        assign_files,
+                                                        committed_files)
 
 _records = st.lists(
     st.tuples(st.integers(0, 2),            # kafka partition
@@ -55,6 +56,67 @@ def test_files_partition_offsets_exactly(spark, recs, flush):
         assert min(offs) == so                    # name == first offset
         assert sorted(offs) == list(range(min(offs), max(offs) + 1)) or \
             len(offs) == len(set(offs))           # no duplicate offsets
+
+
+_ROTATE_MS = 60_000
+
+_rotating_records = st.lists(
+    st.tuples(st.integers(0, 1),            # kafka partition
+              st.integers(0, 300),          # ts offset seconds (~5 buckets)
+              st.sampled_from("AB")),       # encoded partition
+    min_size=1, max_size=40)
+
+
+def _rotating_rows(recs):
+    """(partition, offset, epoch seconds, encoded partition) per record,
+    offsets dense per partition in list order."""
+    seen: dict[int, int] = {}
+    for p, tsec, ep in recs:
+        o = seen.get(p, 0)
+        seen[p] = o + 1
+        yield p, o, 1_700_000_000 + tsec, ep
+
+
+def _py_rotating_files(rows, flush):
+    """The reference's writer loop with rotation on: walk each Kafka
+    partition in offset order and start a new file on an encoded-partition
+    change (R3), a fixed-grid time-bucket change (R2) or after ``flush``
+    records (R1). Returns {(partition, encoded, start, end, count)}."""
+    files, open_ = [], {}
+    for p, o, epoch, ep in rows:
+        bucket = epoch * 1000 // _ROTATE_MS
+        f = open_.get(p)
+        if f is None or (f["ep"], f["bucket"]) != (ep, bucket) \
+                or f["n"] == flush:
+            f = open_[p] = {"p": p, "ep": ep, "bucket": bucket,
+                            "start": o, "n": 0}
+            files.append(f)
+        f["end"] = o
+        f["n"] += 1
+    return {(f["p"], f["ep"], f["start"], f["end"], f["n"]) for f in files}
+
+
+@settings(max_examples=10, deadline=None, derandomize=True,
+          suppress_health_check=list(HealthCheck))
+@given(recs=_rotating_records, flush=st.integers(1, 5))
+def test_rotating_files_match_offset_walk(spark, recs, flush):
+    # rotation on: the windowed cut equals a sequential offset-order walk,
+    # including flush.size splits inside one rotation segment
+    rows = list(_rotating_rows(recs))
+    df = spark.createDataFrame(
+        [("events", *r) for r in rows],
+        "topic string, partition int, offset long, epoch long, etype string"
+    ).withColumn("ts", F.col("epoch").cast("timestamp")).drop("epoch")
+    files = committed_files(df, F.col("etype"), flush,
+                            rotate_interval_ms=_ROTATE_MS).collect()
+    got = {(r.partition, r.encoded_partition, r.start_offset, r.end_offset,
+            r.record_count) for r in files}
+    want = _py_rotating_files(rows, flush)
+    assert got == want
+    # the commit path's per-record start_offset names the same files
+    start_of = {(p, o): s for p, _, s, e, _ in want for o in range(s, e + 1)}
+    tagged = assign_files(df, F.col("etype"), flush, _ROTATE_MS).collect()
+    assert {(r.partition, r.offset): r.start_offset for r in tagged} == start_of
 
 
 @settings(max_examples=8, deadline=None, derandomize=True,

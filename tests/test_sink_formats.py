@@ -186,3 +186,63 @@ def test_promote_rejects_two_part_files_for_one_key(spark, tmp_path):
     assert key in msg
     assert "part-00000.json" in msg and "part-00001.json" in msg
     assert not (tmp_path / key).exists()
+
+
+def test_concurrent_commits_do_not_share_staging(spark, tmp_path,
+                                                 monkeypatch):
+    # two commit_batch calls on one URL: commit B runs start to finish
+    # while commit A sits between its staged write and its renames; each
+    # commit stages under its own dir, so both promote all their objects
+    from kafka_connect_oss_spark import sinks
+
+    cfg = PipelineConfig(url=str(tmp_path), format="json", flush_size=30)
+    a = sink_records_small(spark)
+    b = a.withColumn("topic", F.lit("audit"))
+    promote = sinks._promote_staged
+    b_keys: list[str] = []
+
+    def promote_after_b(spark_, staging, out):
+        monkeypatch.setattr(sinks, "_promote_staged", promote)
+        b_keys.extend(commit_batch(b, _default_enc(), cfg))
+        return promote(spark_, staging, out)
+
+    monkeypatch.setattr(sinks, "_promote_staged", promote_after_b)
+    a_keys = commit_batch(a, _default_enc(), cfg)
+    assert a_keys and b_keys
+    assert {k.split("/")[1] for k in a_keys} == {"events"}
+    assert {k.split("/")[1] for k in b_keys} == {"audit"}
+    for k in a_keys + b_keys:
+        assert os.path.isfile(tmp_path / k)
+    for topic in ("events", "audit"):
+        assert read_committed(spark, str(tmp_path), cfg,
+                              topic=topic).count() == 100
+    assert not [d for d, _, _ in os.walk(tmp_path) if "_staging" in d]
+
+
+def test_rotating_commit_plan_sorts_once_per_pass(spark, records, tmp_path,
+                                                  monkeypatch):
+    # hourly layout, rotation on: the cut is one window pass over
+    # (topic, partition) ORDER BY offset — one Exchange + one Sort — and
+    # the writer adds the _file_id Exchange + its sortWithinPartitions
+    import re
+
+    from kafka_connect_oss_spark import sinks
+    from kafka_connect_oss_spark.streaming.pipeline import (
+        encoded_partition_column)
+
+    cfg = PipelineConfig(url=str(tmp_path), format="json", flush_size=100,
+                         partitioner="hourly", rotate_interval_ms=600_000)
+    plans: list[str] = []
+    write = sinks._write_staged
+
+    def capture(df, cfg_, path):
+        jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode \
+            .fromString("formatted")
+        plans.append(df._jdf.queryExecution().explainString(jmode))
+        write(df, cfg_, path)
+
+    monkeypatch.setattr(sinks, "_write_staged", capture)
+    commit_batch(records, encoded_partition_column(cfg), cfg)
+    (plan,) = plans
+    assert len(re.findall(r"^\(\d+\) Exchange$", plan, re.M)) == 2
+    assert len(re.findall(r"^\(\d+\) Sort$", plan, re.M)) == 2
