@@ -22,8 +22,8 @@ from kafka_connect_oss_spark.registry import (LAZY_ORACLES, ORACLES,  # noqa: E4
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: the reference's WHOLE dataflow executed end-to-end —
     events -> SinkRecord envelope -> daily time-partitioning -> two-phase
-    object commit (stage -> pooled rename, sinks.commit_batch) -> read-back.
-    The returned frame is the committed object inventory (object_key,
+    object commit (executor encode -> pooled move, sinks.commit_batch) ->
+    read-back. The returned frame is the committed object inventory (object_key,
     n_records) re-read from the sink it just wrote, so the smoke check
     covers source, partitioner, sink commit AND the written bytes. Keys are
     derived from (topic, partition, startOffset), so repeated runs

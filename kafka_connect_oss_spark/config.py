@@ -47,7 +47,6 @@ class PipelineConfig:
     compression: str = "none"            # json/bytearray wrapper: none|gzip
     avro_codec: str = "null"             # avro container codec
     parquet_codec: str = "snappy"        # oss.parquet.compression.codec default snappy
-    parquet_block_size: int = 256 * 1024 * 1024   # oss.parquet.block.size (256 MB)
     parquet_page_size: int = 128 * 1024           # oss.parquet.page.size (128 KB)
 
     # --- rotation (R1-R4)
@@ -101,16 +100,6 @@ class PipelineConfig:
             raise ValueError("field partitioner requires partition_field_name")
         if self.flush_size <= 0:
             raise ValueError("flush_size must be > 0")
-
-    def spark_writer_options(self) -> dict[str, str]:
-        """Writer options for the chosen format (F6/F7 -> Spark options)."""
-        if self.format in ("parquet", "parquet-json"):
-            return {"compression": self.parquet_codec,
-                    "parquet.block.size": str(self.parquet_block_size),
-                    "parquet.page.size": str(self.parquet_page_size)}
-        if self.format in ("json", "bytearray"):
-            return {"compression": self.compression}
-        return {}
 
     def extension(self) -> str:
         """Object-key extension incl. compression suffix

@@ -20,10 +20,10 @@ It implements the public Avro 1.x specification directly
   codec, TestDataWriterAvro.java:154-167), ``bzip2``
   (stdlib bz2) and ``xz`` (stdlib lzma, FORMAT_XZ).
 
-Scale posture: encoding runs inside ``applyInPandas`` on executors — one
-Arrow batch per committed file, payload bytes never visit the driver — and
-file I/O goes through ``pyarrow.fs``, so the identical code path serves
-``file://`` in tests and HDFS/S3-compatible stores on a cluster. Reads are
+Scale posture: ``write_container`` is the sink's Avro encoder
+(``sinks._encoder``), called on executors with one committed file's rows
+(one Arrow group per object), so payload bytes never visit the driver;
+the sink writes the bytes through ``pyarrow.fs``. Reads are
 distributed too: ``binaryFile`` scan + ``mapInPandas`` decode (the driver
 only peeks one header for the schema). The sync marker derives from
 md5(schema ‖ codec ‖ payload), keeping re-uploads byte-identical — the
@@ -54,6 +54,8 @@ MAGIC = b"Obj\x01"
 #: codecs the pure-Python writer supports (CodecFactory analog)
 SUPPORTED_CODECS = ("null", "deflate", "snappy", "bzip2", "xz")
 _BLOCK_RECORDS = 4096
+_EPOCH = datetime.datetime(1970, 1, 1)
+_EPOCH_UTC = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
 
 
 # --------------------------------------------------------------------------
@@ -183,19 +185,8 @@ def _write_bytes(buf: bytearray, b: bytes) -> None:
 
 
 def _is_null(v) -> bool:
-    # pandas delivers missing values as None / NaN / NaT; containers
-    # (list/ndarray/dict) are never null markers and don't support `!=`
-    # scalar semantics
-    if v is None:
-        return True
-    if isinstance(v, (list, tuple, dict, str, bytes, bytearray)):
-        return False
-    if type(v).__name__ == "ndarray":
-        return False
-    try:
-        return bool(v != v)                         # NaN/NaT
-    except (ValueError, TypeError):
-        return False
+    # a NaN in a nullable float column is written as null
+    return v is None or (isinstance(v, float) and v != v)
 
 
 def make_encoder(avro):
@@ -235,17 +226,12 @@ def make_encoder(avro):
     lt = avro.get("logicalType")
     if lt == "timestamp-micros":
         def enc_ts(buf, v):
-            # pd.Timestamp/.value is ns; plain datetimes go through an
-            # explicit UTC epoch delta — .timestamp() would interpret a
-            # naive datetime in the executor's local timezone and round
-            # through float
-            ns = getattr(v, "value", None)
-            if ns is not None:
-                us = ns // 1000
-            else:
-                epoch = datetime.datetime(1970, 1, 1, tzinfo=v.tzinfo)
-                us = (v - epoch) // datetime.timedelta(microseconds=1)
-            _write_long(buf, us)
+            # an explicit epoch delta: .timestamp() would read a naive
+            # datetime in the executor's local timezone and round through
+            # float. Aware datetimes count from the UTC epoch, naive ones
+            # (TIMESTAMP_NTZ) from the naive epoch.
+            epoch = _EPOCH if v.tzinfo is None else _EPOCH_UTC
+            _write_long(buf, (v - epoch) // datetime.timedelta(microseconds=1))
         return enc_ts
     if lt == "date":
         def enc_date(buf, v):
@@ -597,59 +583,8 @@ def read_container(data: bytes) -> tuple[dict, list]:
 
 
 # --------------------------------------------------------------------------
-# Spark plumbing: distributed staged write + distributed read
+# Spark plumbing: distributed read
 # --------------------------------------------------------------------------
-
-def _open_fs(path: str):
-    """(pyarrow FileSystem, fs-local path) for file:// and remote URIs."""
-    import pyarrow.fs as pafs
-
-    if path.startswith("file://"):
-        return pafs.LocalFileSystem(), path[len("file://"):]
-    if "://" in path:
-        return pafs.FileSystem.from_uri(path)
-    return pafs.LocalFileSystem(), path
-
-
-def _pdf_to_avro_rows(pdf, avro_schema: dict) -> list[dict]:
-    """pandas frame -> plain-python row dicts in field order."""
-    cols = [f["name"] for f in avro_schema["fields"]]
-    obj = pdf[cols].astype(object)
-    obj = obj.where(obj.notna(), None)
-    return obj.to_dict("records")
-
-
-def write_staged(df: DataFrame, path: str, codec: str = "null") -> int:
-    """Stage `df` (tagged with _file_id) as one avro container per file id:
-    <path>/_file_id=<hex>/part-00000.avro — the exact layout
-    sinks._promote_staged expects. `path` is a fresh per-commit dir, so
-    nothing needs clearing first. Runs on executors via applyInPandas;
-    returns the number of files written."""
-    import pandas as pd
-
-    from kafka_connect_oss_spark.shipping import ensure_package_on_executors
-    ensure_package_on_executors(df.sparkSession)
-
-    body = T.StructType([f for f in df.schema.fields if f.name != "_file_id"])
-    avro_schema = spark_to_avro_schema(body)
-
-    def write_group(key, pdf):
-        file_id = key[0]
-        if "offset" in pdf.columns:                 # intra-file offset order
-            pdf = pdf.sort_values("offset")
-        rows = _pdf_to_avro_rows(pdf.drop(columns=["_file_id"]), avro_schema)
-        data = write_container(rows, avro_schema, codec)
-        fs, root = _open_fs(path)
-        d = f"{root.rstrip('/')}/_file_id={file_id}"
-        fs.create_dir(d, recursive=True)
-        with fs.open_output_stream(f"{d}/part-00000.avro") as f:
-            f.write(data)
-        return pd.DataFrame({"file_id": [file_id], "n": [len(rows)]})
-
-    done = df.groupBy("_file_id").applyInPandas(
-        write_group, "file_id string, n long")
-    return done.count()                              # action triggers writes
-
 
 def read_avro(spark: SparkSession, glob: str) -> DataFrame:
     """Distributed container read: binaryFile scan + mapInPandas decode.

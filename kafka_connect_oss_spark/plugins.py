@@ -7,8 +7,12 @@ Spark-native analog is a name -> builder registry:
   partitioner builder:  (PipelineConfig) -> Column   (the encodedPartition
                         expression; stays declarative so Catalyst folds it
                         into the write plan — no per-row Python)
-  format plugin:        write(df, path, options) + read(spark, glob) +
-                        extension — the F1-F8 writer family, extensible
+  format plugin:        encode(table) + read(spark, glob) + extension —
+                        the F1-F8 writer family, extensible. ``encode``
+                        maps one file's rows (a ``pyarrow.Table`` of the
+                        payload, in offset order) to the object's bytes on
+                        executors: define it in a module shipped with the
+                        job, or inside a function so it pickles by value.
 
 Built-ins self-register at import; user code registers more:
 
@@ -44,10 +48,10 @@ def register_partitioner(name: str):
 
 @dataclass(frozen=True)
 class FormatPlugin:
-    """One writer family (F1-F5): stage-writer + golden-check reader."""
+    """One writer family (F1-F5): object encoder + golden-check reader."""
 
     name: str
-    write: Callable[[DataFrame, str, dict[str, str]], None]
+    encode: Callable[[Any], bytes]  # Any = pyarrow.Table
     read: Callable[[SparkSession, str], DataFrame]
     extension: str
 

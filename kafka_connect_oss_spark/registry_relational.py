@@ -346,18 +346,18 @@ def events_top_users_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sessions_per_user",
     f"""WITH seq AS (
-      SELECT user_id, ts,
+      SELECT user_id, ts, event_id,
              LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
       FROM events),
     brk AS (
-      SELECT user_id, ts,
+      SELECT user_id, ts, event_id,
              CASE WHEN prev IS NULL
                   OR epoch_us(ts) - epoch_us(prev) > {SESSION_GAP_MS * 1000}
                   THEN 1 ELSE 0 END AS is_break
       FROM seq),
     sid AS (
       SELECT user_id, ts,
-             SUM(is_break) OVER (PARTITION BY user_id ORDER BY ts
+             SUM(is_break) OVER (PARTITION BY user_id ORDER BY ts, event_id
                                  ROWS UNBOUNDED PRECEDING) AS session_id
       FROM brk)
     SELECT user_id, CAST(session_id AS INT) AS session_id,

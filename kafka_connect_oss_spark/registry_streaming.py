@@ -429,22 +429,23 @@ def _cut_chunk(cut):
 # the gaps-and-islands SQL — the same shape the sessions_per_user
 # oracle uses, minus the session_id (the streaming operator does not
 # number sessions; per-user sessions are disjoint in time, so the
-# (user, start) pair is already a unique key). LAG ordered by ts alone
-# is deterministic here: equal-ts ties have delta 0, which can never
-# straddle a 30-min break.
+# (user, start) pair is already a unique key). Both windows order by
+# (ts, event_id): with ts alone, two events at one timestamp can come in
+# one order to LAG and the other to the running SUM, and the break flag
+# then lands on the wrong row.
 _SESSIONIZE_ORACLE = f"""WITH seq AS (
-    SELECT user_id, ts,
-           LAG(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev
+    SELECT user_id, ts, event_id,
+           LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
     FROM events),
 brk AS (
-    SELECT user_id, ts,
+    SELECT user_id, ts, event_id,
            CASE WHEN prev IS NULL
                 OR epoch_us(ts) - epoch_us(prev) > {_SESS_GAP_MS * 1000}
                 THEN 1 ELSE 0 END AS is_break
     FROM seq),
 sid AS (
     SELECT user_id, ts,
-           SUM(is_break) OVER (PARTITION BY user_id ORDER BY ts
+           SUM(is_break) OVER (PARTITION BY user_id ORDER BY ts, event_id
                                ROWS UNBOUNDED PRECEDING) AS session_id
     FROM brk)
 SELECT user_id, epoch_us(MIN(ts)) AS session_start_us,

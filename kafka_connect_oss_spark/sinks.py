@@ -6,38 +6,44 @@ encodes lineage: topics/<topic>/<encodedPartition>/<topic>+<partition>+
 exactly-once story is *determinism*: same records -> same split points ->
 same keys -> re-uploads overwrite byte-identically (README.md:119-125).
 
-Spark's file sink names files by task/UUID, so the deterministic-key
-contract is implemented as a two-phase commit, the same shape object-table
-formats use (manifest-style):
+A commit has two phases:
 
-  1. distributed write  — tag every record with its file id (operators/
-     rotation.assign_files: pure window functions), repartition by file id,
-     sortWithinPartitions by offset (intra-file order = offset order, like
-     the reference's FIFO drain), write with partitionBy(_file_id) into
-     this commit's own staging dir, ``_staging/<uuid>``. One output file
-     per group, rows in offset order.
-  2. metadata commit    — rename each staged file to its final object key
-     (hex-decoded from the partition dir name). Renames are per-file
-     metadata ops through the Hadoop FileSystem API (works for file://,
-     hdfs://, oss:// alike) and are parallelizable; no data moves through
-     the driver.
+  1. executor encode — tag every record with its object key (operators/
+     rotation.assign_files: windows over (topic, partition) ORDER BY
+     offset). ``groupBy("topic", "partition", "_key").applyInArrow``
+     reuses their distribution and hands each object's rows, sorted by
+     offset, to the format's ``Arrow table -> bytes`` encoder, so a worker
+     holds at most ``flush_size`` records. Each task writes the bytes once
+     to a temp file through ``pyarrow.fs`` and moves it whole to
+     ``_staging/<uuid>/<key>``, whatever other attempts of it do.
+  2. driver move — move each key the job reported to its final place,
+     64 moves in flight. A move replaces the key (``rename(2)`` on a
+     local disk), so it never goes missing.
 
-Re-running a batch reproduces keys and contents (delete-before-rename = the
-reference's S5 idempotent re-upload). Within one process a replay is
-byte-identical for every format, which the tests assert for JSON and Avro —
-the same check as TestDataWriterAvro.java:226-247. After a restart JSON and
-Avro objects are still byte-identical, but Parquet objects are only
-content-identical (same rows, row order and schema): parquet-mr builds each
-column chunk's footer ``encodings`` list from a hash set, so its order can
-differ between JVM processes.
+The encoders are deterministic, so a replayed batch rewrites the same keys
+with byte-identical objects in every format, also after a restart (S5;
+TestDataWriterAvro.java:226-247). A commit deletes its staging dir even
+when it raises.
+
+Writes take a local path, ``file://`` or any ``pyarrow.fs`` URI (``s3://``,
+``gs://``, ``hdfs://``), with credentials from its query or the AWS default
+chain. OSS goes through its S3 API,
+``s3://<bucket>/<prefix>?endpoint_override=oss-<region>.aliyuncs.com``;
+``oss://`` has no ``pyarrow.fs`` scheme and fails before any job runs. On
+object stores a move is a server-side copy plus a delete. Spark's readers
+get the Hadoop form of the same URL (``_spark_url``: ``s3a://``, no query),
+configured through ``fs.s3a.*`` in ``PipelineConfig.extra_spark_conf``.
 """
 
 from __future__ import annotations
 
+import functools
+import gzip
+import os
 import posixpath
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 
-from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -46,59 +52,161 @@ from kafka_connect_oss_spark.functions.keys import object_key
 from kafka_connect_oss_spark.operators.rotation import assign_files
 
 STAGING_DIR = "_staging"
+#: per-file moves (commit) and deletes (compaction) in flight at once
+_POOL_SIZE = 64
+
+
+def _open_fs(path: str):
+    """(pyarrow FileSystem, fs-local path) for local paths and URIs."""
+    import pyarrow.fs as pafs
+
+    if "://" in path and not path.startswith("file://"):
+        return pafs.FileSystem.from_uri(path)
+    return pafs.LocalFileSystem(), path.removeprefix("file://")
+
+
+def _join(url: str, *parts: str) -> str:
+    """``posixpath.join`` on the path of ``url``, keeping its ``?query``:
+    ``s3://b/p?endpoint_override=h`` -> ``s3://b/p/x?endpoint_override=h``."""
+    base, mark, query = url.partition("?")
+    return posixpath.join(base, *parts) + mark + query
+
+
+def _spark_url(url: str) -> str:
+    """The Hadoop form of a sink URL, for Spark's readers: no ``?query``,
+    and ``s3a://`` for ``s3://``."""
+    base = url.partition("?")[0]
+    if base.startswith("s3://"):
+        return "s3a://" + base[len("s3://"):]
+    return base
+
+
+def _pooled(fn, items: list) -> None:
+    """``fn`` on every item from up to ``_POOL_SIZE`` threads; every call
+    runs, then the first error is raised."""
+    with ThreadPoolExecutor(max(1, min(_POOL_SIZE, len(items)))) as pool:
+        futures = [pool.submit(fn, item) for item in items]
+    for future in futures:
+        future.result()
 
 
 # --------------------------------------------------------------------------
-# format writers (F1-F8): thin dispatch onto Spark's built-in writers
+# format encoders (F1-F8): one ``Arrow table -> bytes`` function per format
 # --------------------------------------------------------------------------
 
-def _write_staged(df: DataFrame, cfg: PipelineConfig, path: str) -> None:
-    """Stage one batch, partitioned by _file_id, one file per group."""
-    writer = (df.write.mode("overwrite")
-              .partitionBy("_file_id"))
-    for k, v in cfg.spark_writer_options().items():
-        writer = writer.option(k, v)
+def _parquet_bytes(table, codec: str, page_size: int):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sink = pa.BufferOutputStream()
+    pq.write_table(table, sink,
+                   compression="none" if codec == "uncompressed" else codec,
+                   data_page_size=page_size)
+    return sink.getvalue()
+
+
+def _avro_bytes(table, avro_schema: dict, codec: str) -> bytes:
+    from kafka_connect_oss_spark.formats import avro_py
+
+    return avro_py.write_container(table.to_pylist(), avro_schema, codec)
+
+
+def _lines_bytes(table, sep: bytes, gzipped: bool) -> bytes:
+    """The ``_line`` column as separator-terminated lines (F5), gzipped
+    with a zero mtime so the bytes depend on the lines only (F6)."""
+    import pyarrow as pa
+
+    # a null value (a Kafka tombstone) is an empty line
+    lines = table.column("_line").cast(pa.binary()).fill_null(b"")
+    data = sep.join(lines.to_pylist()) + sep
+    return gzip.compress(data, mtime=0) if gzipped else data
+
+
+def _encoder(df: DataFrame, cfg: PipelineConfig):
+    """(columns, encode): the columns the format's encoder reads, by name,
+    and the ``Arrow table -> bytes`` encoder itself."""
+    body = [c for c in df.columns if c not in {
+        "_key", "encoded_partition", "segment", "file_idx", "start_offset"}]
     fmt = cfg.format
+    if fmt in ("json", "bytearray"):
+        # lines are rendered in the JVM, one ``_line`` per record
+        line = (F.col("value") if fmt == "bytearray"
+                else F.to_json(F.struct(*body)))
+        sep = cfg.byte_line_separator if fmt == "bytearray" else "\n"
+        return {"_line": line}, functools.partial(
+            _lines_bytes, sep=sep.encode("utf-8"),
+            gzipped=cfg.compression == "gzip")
+    cols = {c: F.col(c) for c in body}
     if fmt in ("parquet", "parquet-json"):
-        writer.parquet(path)
-    elif fmt == "json":
-        writer.json(path)
-    elif fmt == "avro":
+        return cols, functools.partial(_parquet_bytes, codec=cfg.parquet_codec,
+                                       page_size=cfg.parquet_page_size)
+    if fmt == "avro":
         # F2: one container per file with a content-derived sync marker
-        # (formats/avro_py), so replays stay byte-identical
         from kafka_connect_oss_spark.formats import avro_py
 
-        avro_py.write_staged(df, path, cfg.avro_codec)
-    elif fmt == "bytearray":
-        # raw byte-lines (F5): value rendered as text lines with the
-        # configured separator; gzip via writer option (F6)
-        writer.option("lineSep", cfg.byte_line_separator).text(path)
-    else:
-        # A3: custom formats registered by name (plugins.py)
-        from kafka_connect_oss_spark import plugins
+        schema = avro_py.spark_to_avro_schema(df.select(*body).schema)
+        return cols, functools.partial(_avro_bytes, avro_schema=schema,
+                                       codec=cfg.avro_codec)
+    # A3: custom formats registered by name (plugins.py)
+    from kafka_connect_oss_spark import plugins
 
-        if fmt in plugins.FORMATS:
-            plugins.FORMATS[fmt].write(df, path, cfg.spark_writer_options())
-        else:
-            raise ValueError(f"unknown format {cfg.format!r}")
+    if fmt in plugins.FORMATS:
+        return cols, plugins.FORMATS[fmt].encode
+    raise ValueError(f"unknown format {cfg.format!r}")
 
 
-def payload_columns(df: DataFrame, cfg: PipelineConfig) -> list[str]:
-    """Columns that go into the object body (strip envelope/bookkeeping)."""
-    drop = {"_file_id", "encoded_partition", "segment", "file_idx",
-            "start_offset"}
-    if cfg.format == "bytearray":
-        return ["value"]
-    return [c for c in df.columns if c not in drop]
+def _write_staged(df: DataFrame, cfg: PipelineConfig, fs,
+                  root: str) -> list[str]:
+    """Phase 1: encode each object of the key-tagged ``df`` once, in its
+    own Arrow group, and write it to ``<root>/<key>`` through ``fs``.
+    Returns the sorted keys the job's tasks reported."""
+    from kafka_connect_oss_spark.shipping import ensure_package_on_executors
+
+    ensure_package_on_executors(df.sparkSession)
+    cols, encode = _encoder(df, cfg)
+    names = list(cols)                # the closure must not hold Columns
+    group = ["topic", "partition", "_key", "offset"]
+    job = df.select(*group, *[c.alias(n) for n, c in cols.items()
+                              if n not in group])
+    made: set[str] = set()            # parent dirs, per task
+
+    def write_object(table):
+        import pyarrow as pa
+
+        key = table.column("_key")[0].as_py()
+        dest = posixpath.join(root, key)
+        if posixpath.dirname(dest) not in made:
+            fs.create_dir(posixpath.dirname(dest), recursive=True)
+            made.add(posixpath.dirname(dest))
+        data = encode(table.sort_by("offset").select(names))
+        # a temp file per attempt: a zombie or speculative attempt never
+        # truncates <key>; compression=None: "detect" would gzip a .gz key
+        # a second time
+        tmp = f"{dest}.{uuid.uuid4().hex}.tmp"
+        with fs.open_output_stream(tmp, compression=None) as f:
+            f.write(data)
+        fs.move(tmp, dest)
+        return pa.table({"key": [key]})
+
+    # one group per object, on the cut's (topic, partition) distribution
+    rows = (job.groupBy("topic", "partition", "_key")
+            .applyInArrow(write_object, "key string").collect())
+    return sorted(r.key for r in rows)
 
 
 # --------------------------------------------------------------------------
 # deterministic batch commit (C1/C2)
 # --------------------------------------------------------------------------
 
-def tag_with_object_keys(records: DataFrame, encoded: Column,
-                         cfg: PipelineConfig) -> DataFrame:
-    """assign_files + full object key per record, as `_file_id` (hex)."""
+def commit_batch(records: DataFrame, encoded: Column, cfg: PipelineConfig,
+                 out_url: str | None = None) -> list[str]:
+    """Write one (micro-)batch with deterministic object keys.
+
+    Returns the list of committed object keys. Safe to re-run, and safe
+    to run concurrently on one URL: each call stages under its own
+    ``_staging/<uuid>`` dir, and final keys are replaced per file. No call
+    leaves its staging dir behind, whether it returns or raises.
+    """
     tagged = assign_files(
         records, encoded, cfg.flush_size,
         cfg.rotate_interval_ms if cfg.rotate_interval_ms > 0 else None,
@@ -107,112 +215,42 @@ def tag_with_object_keys(records: DataFrame, encoded: Column,
                      F.col("start_offset"), F.col("encoded_partition"),
                      cfg.extension(), cfg.topics_dir,
                      cfg.filename_offset_zero_pad_width)
-    return tagged.withColumn("_file_id", F.hex(F.encode(key, "UTF-8")))
+    # opened on the driver, so oss:// fails before any job runs
+    fs, root = _open_fs((out_url or cfg.url).rstrip("/"))
+    staging = posixpath.join(root, STAGING_DIR, uuid.uuid4().hex)
+    try:
+        keys = _write_staged(tagged.withColumn("_key", key), cfg, fs, staging)
+        return _promote_staged(fs, staging, root, keys)
+    finally:
+        _drop_staging(fs, staging)
 
 
-def commit_batch(records: DataFrame, encoded: Column, cfg: PipelineConfig,
-                 out_url: str | None = None) -> list[str]:
-    """Write one (micro-)batch with deterministic object keys.
-
-    Returns the list of committed object keys. Safe to re-run, and safe
-    to run concurrently on one URL: each call stages under its own
-    ``_staging/<uuid>`` dir, and final keys are replaced per file.
-    """
-    spark = records.sparkSession
-    out = (out_url or cfg.url).rstrip("/")
-    tagged = tag_with_object_keys(records, encoded, cfg)
-
-    # The _file_id repartition sets the write's parallelism: without it AQE
-    # merges the write into fewer tasks. In perfbench's ingest pass
-    # (local[4], 6k-event batches, hourly, rotate 600 s, flush 1000) the
-    # batch median rose from 1.5-1.9 s to 2.1-2.3 s without it.
-    n_part = max(records.sparkSession.sparkContext.defaultParallelism, 1)
-    staged = (tagged
-              .repartition(n_part, "_file_id")
-              .sortWithinPartitions("_file_id", "offset"))
-    body_cols = payload_columns(staged, cfg)
-    staging = posixpath.join(out, STAGING_DIR, uuid.uuid4().hex)
-    _write_staged(staged.select("_file_id", *body_cols), cfg, staging)
-    return _promote_staged(spark, staging, out)
+def _promote_staged(fs, staging: str, root: str,
+                    keys: list[str]) -> list[str]:
+    """Phase 2: move every staged object to its key; returns the keys.
+    The moves run from a thread pool, so at millions of files per 100 TB
+    the phase is bounded by pool width, not file count."""
+    for parent in {posixpath.dirname(k) for k in keys}:
+        fs.create_dir(posixpath.join(root, parent), recursive=True)
+    _pooled(lambda k: fs.move(posixpath.join(staging, k),
+                              posixpath.join(root, k)), keys)
+    return keys
 
 
-#: concurrent metadata ops during commit phase 2 (renames are cheap
-#: metadata RPCs on OSS/HDFS; 64 in flight keeps the phase O(files/64)
-#: instead of O(files) serialized through one client)
-_RENAME_POOL_SIZE = 64
+def _drop_staging(fs, staging: str) -> None:
+    """Delete one commit's staging dir, then ``_staging`` if it is empty."""
+    import pyarrow.fs as pafs
 
-
-def _promote_staged(spark: SparkSession, staging: str, out: str) -> list[str]:
-    """Phase 2: rename staged part-files to their decoded object keys.
-
-    The rename list is collected with one listStatus sweep, then executed
-    from a thread pool: each rename is an independent per-file metadata op
-    (delete-before-rename keeps S5 idempotency per file), so at
-    reference-style flush sizes — millions of files per 100 TB — the phase
-    is bounded by pool width, not file count, instead of serializing every
-    RPC through the driver loop. py4j and Hadoop FileSystem clients are
-    thread-safe; pool width 64 matches typical object-store admin QPS.
-    """
-    from concurrent.futures import ThreadPoolExecutor
-
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    conf = jsc.hadoopConfiguration()
-    Path = jvm.org.apache.hadoop.fs.Path
-    staging_path = Path(staging)
-    fs = staging_path.getFileSystem(conf)
-
-    if not fs.exists(staging_path):
-        return []
-
-    renames: list[tuple] = []        # (src Path, dest Path, key)
-    dest_parents: set[str] = set()
-    for status in fs.listStatus(staging_path):
-        name = status.getPath().getName()
-        if not name.startswith("_file_id="):
-            continue
-        key = bytes.fromhex(name[len("_file_id="):]).decode("utf-8")
-        part_files = [
-            f.getPath() for f in fs.listStatus(status.getPath())
-            if not f.getPath().getName().startswith(("_", "."))]
-        # one file per group by construction (repartition on _file_id);
-        # anything else means the staging dir was shared or left behind
-        if len(part_files) != 1:
-            names = sorted(p.getName() for p in part_files)
-            raise RuntimeError(
-                f"staged object {key!r} has {len(part_files)} part files "
-                f"under {status.getPath().toString()}, expected 1: {names}")
-        dest = Path(posixpath.join(out, key))
-        dest_parents.add(posixpath.dirname(posixpath.join(out, key)))
-        renames.append((part_files[0], dest, key))
-
-    # parent dirs once per directory, not once per file
-    for parent in dest_parents:
-        fs.mkdirs(Path(parent))
-
-    def _rename(item) -> str:
-        src, dest, key = item
-        if fs.exists(dest):          # S5: idempotent re-upload
-            fs.delete(dest, False)
-        fs.rename(src, dest)
-        return key
-
-    if renames:
-        with ThreadPoolExecutor(
-                min(_RENAME_POOL_SIZE, len(renames))) as pool:
-            committed = list(pool.map(_rename, renames))
-    else:
-        committed = []
-    fs.delete(staging_path, True)    # drop staging metadata
-    parent = staging_path.getParent()
-    if parent.getName() == STAGING_DIR:
+    if fs.get_file_info(staging).type != pafs.FileType.NotFound:
+        fs.delete_dir(staging)
+    if isinstance(fs, pafs.LocalFileSystem):
         try:
-            # non-recursive: a non-empty _staging holds another commit's
-            # files, which that commit promotes and removes itself
-            fs.delete(parent, False)
-        except Py4JJavaError:
+            # rmdir(2) keeps a _staging that holds another commit's files;
+            # pyarrow.fs has no such delete, so an empty _staging stays on
+            # hdfs:// (object stores have no empty dirs)
+            os.rmdir(posixpath.dirname(staging))
+        except OSError:
             pass
-    return sorted(committed)
 
 
 def compact_committed(spark: SparkSession, out_url: str, cfg: PipelineConfig,
@@ -226,44 +264,34 @@ def compact_committed(spark: SparkSession, out_url: str, cfg: PipelineConfig,
     the classic small-file explosion; a periodic compaction pass is how a
     100 TB layout stays scannable. The rewrite reuses commit_batch, so
     compacted files follow the same key scheme (topic+partition+startOffset)
-    and the pass is idempotent — rerunning it is a no-op rename over
-    identical bytes. Readers see partition dirs atomically per-file; run it
-    when the partition is no longer being appended (past partitions under
-    time-based layouts).
+    and the pass is idempotent — rerunning it rewrites identical bytes.
+    Readers see partition dirs atomically per-file; run it when the
+    partition is no longer being appended (past partitions under time-based
+    layouts).
 
     Returns the new object keys. Requires the envelope columns
     (topic/partition/offset[/ts]) in the stored payload.
     """
     from dataclasses import replace
 
+    import pyarrow.fs as pafs
+
     existing = read_committed(spark, out_url, cfg, topic)
     big_cfg = replace(cfg, flush_size=target_records_per_file)
     # rewrite under the same url: deterministic keys mean overlapping names
     # are overwritten in place (S5), then stale small files are removed
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    Path = jvm.org.apache.hadoop.fs.Path
-    root = Path(posixpath.join(out_url.rstrip("/"), cfg.topics_dir, topic))
-    fs = root.getFileSystem(conf)
-    old_files: set[str] = set()
-    if fs.exists(root):
-        it = fs.listFiles(root, True)  # Hadoop RemoteIterator
-        while it.hasNext():
-            old_files.add(str(it.next().getPath().toUri().getPath()))
+    fs, root = _open_fs(_join(out_url, cfg.topics_dir, topic))
+    selector = pafs.FileSelector(root, recursive=True, allow_not_found=True)
+    old_files = [i.path for i in fs.get_file_info(selector)
+                 if i.type == pafs.FileType.File]
 
     from kafka_connect_oss_spark.streaming.pipeline import (
         encoded_partition_column)
     keys = commit_batch(existing, encoded_partition_column(big_cfg), big_cfg,
                         out_url)
     new_suffixes = tuple("/" + k for k in keys)
-    stale = [f for f in sorted(old_files) if not f.endswith(new_suffixes)]
-    if stale:
-        # deletes are independent metadata ops — same pooling rationale as
-        # _promote_staged
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(min(_RENAME_POOL_SIZE, len(stale))) as pool:
-            list(pool.map(lambda f: fs.delete(Path(f), False), stale))
+    _pooled(fs.delete_file,
+            [f for f in sorted(old_files) if not f.endswith(new_suffixes)])
     return keys
 
 
@@ -271,8 +299,8 @@ def read_committed(spark: SparkSession, out_url: str, cfg: PipelineConfig,
                    topic: str = "events") -> DataFrame:
     """Independent read-back of committed objects (golden-check reader,
     §5 readRecords analog)."""
-    glob = posixpath.join(out_url.rstrip("/"), cfg.topics_dir, topic,
-                          "*", f"*{cfg.extension()}")
+    glob = _spark_url(_join(out_url, cfg.topics_dir, topic, "*",
+                            f"*{cfg.extension()}"))
     if cfg.format in ("parquet", "parquet-json"):
         # schema-evolved partitions legitimately hold files with differing
         # (compatible) schemas — mergeSchema is the Spark read-side of E1/E2

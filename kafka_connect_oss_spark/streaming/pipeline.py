@@ -13,11 +13,10 @@ deterministic commit (sinks.commit_batch). Mapping of reference semantics:
 Exactly-once: Spark replays an unacknowledged micro-batch after failure;
 commit_batch derives object keys from (topic, partition, startOffset), so
 the replay overwrites the same keys with the same records — the reference's
-determinism guarantee (README.md:119-125) rather than a transaction log. A
-replay in the same process rewrites the same bytes; after a restart JSON and
-Avro objects are byte-identical and Parquet objects content-identical (the
-footer's per-column ``encodings`` order can change between JVMs, see
-sinks.py).
+determinism guarantee (README.md:119-125) rather than a transaction log. The
+replay rewrites byte-identical objects in every format, in the same process
+or after a restart; a commit that fails part-way leaves no staging behind
+(see sinks.py).
 """
 
 from __future__ import annotations

@@ -124,9 +124,10 @@ def main() -> None:
         n = build().count()
         print(f"{name}: {time.perf_counter() - t0:6.2f}s  rows={n:,}")
 
-    # commit-rename scaling: phase 2 (thread-pooled metadata renames) must
-    # stay near-flat per file as file count grows 10x — the 100 TB commit
-    # is O(files/pool), not O(files) serialized
+    # commit scaling: phase 1 encodes each file once in its own Arrow
+    # group and phase 2 moves the files from a thread pool, so the time
+    # per file must stay near-flat as the file count grows 10x — the
+    # 100 TB commit is O(files/pool), not O(files) serialized
     import shutil
     import tempfile
 

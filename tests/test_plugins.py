@@ -23,12 +23,20 @@ def _plugins():
     def _user_bucket(cfg):
         return F.concat(F.lit("ub="), (F.col("user_id") % 4).cast("string"))
 
+    # defined here, not at module level: the sink calls encoders on
+    # executors, which cannot import this test module, so the function is
+    # pickled by value
+    def _encode_csv(table):
+        import pyarrow as pa
+        import pyarrow.csv
+
+        sink = pa.BufferOutputStream()
+        pyarrow.csv.write_csv(table, sink)
+        return sink.getvalue().to_pybytes()
+
     register_format(FormatPlugin(
         name="csv",
-        write=lambda df, path, opts: (df.write.mode("overwrite")
-                                      .partitionBy("_file_id")
-                                      .options(**opts).option("header", "true")
-                                      .csv(path)),
+        encode=_encode_csv,
         read=lambda spark, glob: (spark.read.option("header", "true")
                                   .option("inferSchema", "true").csv(glob)),
         extension=".csv",

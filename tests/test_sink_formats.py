@@ -6,6 +6,7 @@ strategy (SURVEY.md §5) plus the idempotent re-upload check
 import glob
 import hashlib
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -170,22 +171,69 @@ def test_multi_topic_directory_layout(spark, tmp_path):
     assert back.count() == 100
 
 
-def test_promote_rejects_two_part_files_for_one_key(spark, tmp_path):
-    # a staging dir holding two part files under one _file_id= cannot be
-    # promoted to one object; the error names the key and both files
-    from kafka_connect_oss_spark.sinks import STAGING_DIR, _promote_staged
+def test_one_url_serves_writes_and_spark_reads():
+    # writes, moves and deletes go through pyarrow.fs, which takes the
+    # documented OSS form with its endpoint in the query; Spark's readers
+    # take the Hadoop form of the same URL (s3a://, no query), with the
+    # glob joined in front of the query
+    from kafka_connect_oss_spark.sinks import _join, _spark_url
 
-    key = "topics/events/partition=0/events+0+0000000000.json"
-    group = tmp_path / STAGING_DIR / f"_file_id={key.encode().hex()}"
-    group.mkdir(parents=True)
-    for name in ("part-00000.json", "part-00001.json"):
-        (group / name).write_text("{}\n")
-    with pytest.raises(RuntimeError, match="part files") as err:
-        _promote_staged(spark, str(tmp_path / STAGING_DIR), str(tmp_path))
-    msg = str(err.value)
-    assert key in msg
-    assert "part-00000.json" in msg and "part-00001.json" in msg
-    assert not (tmp_path / key).exists()
+    url = "s3://bucket/prefix?endpoint_override=oss-cn-hangzhou.aliyuncs.com"
+    assert _join(url, "topics", "events") == (
+        "s3://bucket/prefix/topics/events"
+        "?endpoint_override=oss-cn-hangzhou.aliyuncs.com")
+    assert _spark_url(_join(url, "topics", "events", "*", "*.json")) == (
+        "s3a://bucket/prefix/topics/events/*/*.json")
+    for local in ("/tmp/out/topics", "file:///tmp/out/topics",
+                  "gs://bucket/out/topics"):
+        assert _spark_url(local) == local
+
+
+def test_file_url_commits_reads_and_compacts(spark, tmp_path):
+    # one file:// URL for the commit, the read-back and the compaction
+    from kafka_connect_oss_spark.sinks import compact_committed
+
+    url = "file://" + str(tmp_path)
+    cfg = PipelineConfig(url=url, format="json", flush_size=10)
+    df = sink_records_small(spark)
+    assert len(commit_batch(df, _default_enc(), cfg)) == 10
+    assert read_committed(spark, url, cfg).count() == 100
+    keys = compact_committed(spark, url, cfg, target_records_per_file=1000)
+    assert len(keys) == 2
+    assert sorted(os.path.relpath(p, tmp_path) for p in glob.glob(
+        str(tmp_path / "topics/*/*/*"))) == keys
+    assert read_committed(spark, url, cfg).count() == 100
+
+
+def test_url_without_a_pyarrow_scheme_fails_before_any_job(spark):
+    # oss:// has no pyarrow.fs scheme: the commit fails on the driver
+    sc = spark.sparkContext
+    cfg = PipelineConfig(url="oss://bucket/prefix", format="json")
+    df = sink_records_small(spark)
+    sc.setJobGroup("oss-url", "commit to an oss:// URL")
+    try:
+        with pytest.raises(Exception, match="oss"):
+            commit_batch(df, _default_enc(), cfg)
+        assert not sc.statusTracker().getJobIdsForGroup("oss-url")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_bytearray_null_value_is_an_empty_line(spark, tmp_path):
+    # a tombstone (null value) is written as an empty line, not an error
+    cfg = PipelineConfig(url=str(tmp_path), format="bytearray", flush_size=50)
+    df = sink_records_small(spark).withColumn(
+        "value", F.when(F.col("offset") % 5 != 0, F.col("key")))
+    keys = commit_batch(df, _default_enc(), cfg)
+    lines = []
+    for k in keys:
+        with open(tmp_path / k, "rb") as fh:
+            data = fh.read()
+        assert data.endswith(b"\n")
+        lines += data[:-1].split(b"\n")
+    assert sorted(lines) == sorted(
+        (r.value or "").encode() for r in df.collect())
+    assert lines.count(b"") == 20
 
 
 def test_concurrent_commits_do_not_share_staging(spark, tmp_path,
@@ -201,10 +249,10 @@ def test_concurrent_commits_do_not_share_staging(spark, tmp_path,
     promote = sinks._promote_staged
     b_keys: list[str] = []
 
-    def promote_after_b(spark_, staging, out):
+    def promote_after_b(*args):
         monkeypatch.setattr(sinks, "_promote_staged", promote)
         b_keys.extend(commit_batch(b, _default_enc(), cfg))
-        return promote(spark_, staging, out)
+        return promote(*args)
 
     monkeypatch.setattr(sinks, "_promote_staged", promote_after_b)
     a_keys = commit_batch(a, _default_enc(), cfg)
@@ -219,30 +267,146 @@ def test_concurrent_commits_do_not_share_staging(spark, tmp_path,
     assert not [d for d, _, _ in os.walk(tmp_path) if "_staging" in d]
 
 
+def _writer_plan(spark, monkeypatch, records, cfg, tmp_path) -> str:
+    """Commit `records` and return the formatted plan of the writer job
+    (the groupBy(...).applyInArrow frame)."""
+    import shutil
+
+    from pyspark.sql.group import GroupedData
+
+    from kafka_connect_oss_spark.streaming.pipeline import (
+        encoded_partition_column)
+
+    plans: list[str] = []
+    apply = GroupedData.applyInArrow
+
+    def capture(self, func, schema):
+        job = apply(self, func, schema)
+        jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode \
+            .fromString("formatted")
+        plans.append(job._jdf.queryExecution().explainString(jmode))
+        return job
+
+    with monkeypatch.context() as m:
+        m.setattr(GroupedData, "applyInArrow", capture)
+        keys = commit_batch(records, encoded_partition_column(cfg), cfg)
+    assert sorted(keys) == sorted(
+        os.path.relpath(p, tmp_path)
+        for p in glob.glob(str(tmp_path / "topics/*/*/*.json")))
+    (plan,) = plans
+    assert "FlatMapGroupsInArrow" in plan
+    shutil.rmtree(tmp_path / "topics")
+    return plan
+
+
+def _count(node, plan):
+    return len(re.findall(rf"^\(\d+\) {node}$", plan, re.M))
+
+
 def test_rotating_commit_plan_sorts_once_per_pass(spark, records, tmp_path,
                                                   monkeypatch):
     # hourly layout, rotation on: the cut is one window pass over
     # (topic, partition) ORDER BY offset — one Exchange + one Sort — and
-    # the writer adds the _file_id Exchange + its sortWithinPartitions
-    import re
-
-    from kafka_connect_oss_spark import sinks
-    from kafka_connect_oss_spark.streaming.pipeline import (
-        encoded_partition_column)
-
+    # the writer's groupBy(topic, partition, _key) reuses that
+    # distribution and adds one Sort, so that each object is one Arrow
+    # group; with two topics as with one literal topic (the file stand-in
+    # sources, whose topic Catalyst folds out of the window's keys)
     cfg = PipelineConfig(url=str(tmp_path), format="json", flush_size=100,
                          partitioner="hourly", rotate_interval_ms=600_000)
-    plans: list[str] = []
-    write = sinks._write_staged
+    two_topics = records.withColumn(
+        "topic", F.when(F.col("event_id") % 2 == 0, "events")
+        .otherwise("audit"))
+    for batch in (two_topics, records):
+        plan = _writer_plan(spark, monkeypatch, batch, cfg, tmp_path)
+        assert _count("Exchange", plan) == 1
+        assert _count("Sort", plan) == 2
+        assert re.search(r"^Arguments: \[topic#\d+, partition#\d+, "
+                         r"_key#\d+\], write_object", plan, re.M)
 
-    def capture(df, cfg_, path):
-        jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode \
-            .fromString("formatted")
-        plans.append(df._jdf.queryExecution().explainString(jmode))
-        write(df, cfg_, path)
 
-    monkeypatch.setattr(sinks, "_write_staged", capture)
-    commit_batch(records, encoded_partition_column(cfg), cfg)
-    (plan,) = plans
-    assert len(re.findall(r"^\(\d+\) Exchange$", plan, re.M)) == 2
-    assert len(re.findall(r"^\(\d+\) Sort$", plan, re.M)) == 2
+_FRESH_DRIVER = r"""
+import hashlib, json, os, sys
+
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
+
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.ui.enabled", "false")
+         .config("spark.sql.session.timeZone", "UTC")
+         .config("spark.sql.shuffle.partitions", "4").getOrCreate())
+
+from kafka_connect_oss_spark.config import PipelineConfig
+from kafka_connect_oss_spark.functions import partition as P
+from kafka_connect_oss_spark.sinks import commit_batch, read_committed
+
+rows = [("events", i % 2, i // 2, f"k{i}", f"t{i % 3}", i * 0.5)
+        for i in range(100)]
+df = (spark.createDataFrame(rows, "topic string, partition int, offset long, "
+                                  "key string, event_type string, x double")
+      .withColumn("ts", F.timestamp_micros(F.lit(1704067200000000)
+                                           + F.col("offset") * 1000))
+      .withColumn("value", F.concat_ws("|", "event_type", "key")))
+formats = {"parquet": {}, "json": {}, "jsongz": {"compression": "gzip"},
+           "avro": {"avro_codec": "deflate"}, "bytearray": {}}
+result = {"objects": {}, "rows": {}}
+for name, opts in formats.items():
+    cfg = PipelineConfig(url=os.path.join(sys.argv[2], name), flush_size=30,
+                         format="json" if name == "jsongz" else name, **opts)
+    for key in commit_batch(df, P.default_partition(F.col("partition")), cfg):
+        with open(os.path.join(cfg.url, key), "rb") as fh:
+            result["objects"][f"{name}/{key}"] = hashlib.sha256(
+                fh.read()).hexdigest()
+    result["rows"][name] = read_committed(spark, cfg.url, cfg).count()
+
+
+def package_file(batches):
+    import pandas as pd
+
+    import kafka_connect_oss_spark
+
+    for _ in batches:
+        yield pd.DataFrame({"f": [kafka_connect_oss_spark.__file__]})
+
+
+result["worker_package"] = df.limit(1).mapInPandas(
+    package_file, "f string").first().f
+print(json.dumps(result))
+spark.stop()
+"""
+
+
+def test_fresh_processes_commit_identical_objects(tmp_path):
+    # two driver processes, each started outside the checkout and without
+    # it on PYTHONPATH, so their Python workers import the package from
+    # the zip the driver ships; the same batch must give the same object
+    # bytes in every format, Parquet included
+    import json
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in env.get("PYTHONPATH", "").split(os.pathsep)
+        if p and os.path.abspath(p) != repo)
+    results = []
+    for run in ("a", "b"):
+        cwd = tmp_path / f"cwd_{run}"
+        cwd.mkdir()
+        proc = subprocess.run(
+            [sys.executable, "-c", _FRESH_DRIVER, repo,
+             str(tmp_path / f"out_{run}")],
+            cwd=cwd, env=env, capture_output=True, text=True, timeout=600)
+        assert proc.returncode == 0, proc.stderr[-4000:]
+        results.append(json.loads(proc.stdout.strip().splitlines()[-1]))
+    a, b = results
+    for res in results:
+        package = res["worker_package"]
+        assert ".zip" + os.sep + "kafka_connect_oss_spark" in package, package
+        assert not package.startswith(repo), package
+        assert res["rows"] == dict.fromkeys(
+            ("parquet", "json", "jsongz", "avro", "bytearray"), 100)
+    assert {k.split("/")[0] for k in a["objects"]} == {
+        "parquet", "json", "jsongz", "avro", "bytearray"}
+    assert a["objects"] == b["objects"]

@@ -2,6 +2,8 @@
 deterministic commit, with checkpoint-based exactly-once restart
 (SURVEY.md §2 C2-C4, §7.2 step 7)."""
 
+import os
+
 import pytest
 
 from kafka_connect_oss_spark.config import PipelineConfig
@@ -108,6 +110,72 @@ def test_transient_failure_recovers_exactly_once(spark, sf_dir, tmp_path):
     back = read_committed(spark, cfg.url, cfg)
     n_events = spark.read.parquet(f"{sf_dir}/events.parquet").count()
     assert back.count() == n_events  # no dupes, no loss
+
+
+def _objects(url):
+    """key -> bytes of every committed object under `url`."""
+    out = {}
+    for d, _, names in os.walk(url):
+        for n in names:
+            path = os.path.join(d, n)
+            with open(path, "rb") as fh:
+                out[os.path.relpath(path, url)] = fh.read()
+    return out
+
+
+def _staging_left(url):
+    return [d for d, _, _ in os.walk(url) if "_staging" in d]
+
+
+@pytest.mark.parametrize("fault", ["before_moves", "after_some_moves"])
+def test_commit_crash_replays_byte_identical(spark, stream, tmp_path,
+                                             monkeypatch, fault):
+    # C: the commit dies between its staged write and its moves, or after
+    # some of its moves; restarting from the checkpoint replays the batch
+    # and leaves exactly the objects of a clean run, byte for byte
+    import shutil
+
+    from kafka_connect_oss_spark import sinks
+
+    def config(name):
+        return PipelineConfig(
+            url=str(tmp_path / name / "out"), format="parquet",
+            flush_size=500, checkpoint_location=str(tmp_path / name / "ckpt"))
+
+    clean = config("clean")
+    IngestPipeline(clean).start(stream, available_now=True) \
+        .awaitTermination(120)
+    expected = _objects(clean.url)
+    assert len(expected) > 2
+
+    crash = config("crash")
+    if fault == "before_moves":
+        def promote(*args):
+            raise RuntimeError("injected crash before the moves")
+
+        monkeypatch.setattr(sinks, "_promote_staged", promote)
+        landed = set()
+    else:
+        # a directory at one key's final path: that move fails, the
+        # others land
+        blocked = sorted(expected)[len(expected) // 2]
+        os.makedirs(os.path.join(crash.url, blocked, "in_the_way"))
+        landed = set(expected) - {blocked}
+    q = IngestPipeline(crash).start(stream, available_now=True)
+    with pytest.raises(Exception):
+        q.awaitTermination(120)
+    assert _objects(crash.url) == {k: expected[k] for k in landed}
+    assert not _staging_left(crash.url)
+
+    # clear the fault and replay from the checkpoint
+    if fault == "before_moves":
+        monkeypatch.undo()
+    else:
+        shutil.rmtree(os.path.join(crash.url, blocked))
+    IngestPipeline(crash).start(stream, available_now=True) \
+        .awaitTermination(120)
+    assert _objects(crash.url) == expected
+    assert not _staging_left(crash.url)
 
 
 def test_rate_limited_multi_batch_ingest(spark, sf_dir, tmp_path):
