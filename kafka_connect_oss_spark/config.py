@@ -8,7 +8,7 @@ reference's ConfigDef validators/recommenders where they exist.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 #: formats the engine can write (reference: OSSSinkConnectorConfiguration.java:96-108, A3)
 VALID_FORMATS = ("json", "avro", "parquet", "parquet-json", "bytearray")
@@ -53,14 +53,12 @@ class PipelineConfig:
     flush_size: int = 10_000                      # flush.size (README.md:169)
     rotate_interval_ms: int = -1                  # rotate.interval.ms (R2; -1 = off)
     rotate_schedule_interval_ms: int = -1         # rotate.schedule.interval.ms (R4; -1 = off)
-    retry_backoff_ms: int = 5_000                 # retry.backoff.ms (C4)
 
     # --- partitioning (P2-P5)
     partitioner: str = "default"                  # partitioner.class analog
     partition_field_name: str | None = None       # partition.field.name (P3)
     partition_duration_ms: int = -1               # partition.duration.ms (P4)
     path_format: str = "'partition'=YYYY-MM-dd-HH"  # path.format (Joda pattern, P4)
-    locale: str = "en_US"                         # locale (P4)
     timezone: str = "UTC"                         # timezone (P4)
     timestamp_extractor: str = "Record"           # timestamp.extractor (P5)
     timestamp_field: str = "ts"                   # timestamp.field (RecordField, P5)
@@ -76,9 +74,6 @@ class PipelineConfig:
     # --- delivery (C2/C3)
     checkpoint_location: str | None = None        # Spark checkpoint == offset WAL
     max_offsets_per_trigger: int | None = None    # backpressure analog (C3)
-
-    # --- misc
-    extra_spark_conf: dict[str, str] = field(default_factory=dict)
 
     def __post_init__(self) -> None:
         def _check(value: str, valid: tuple[str, ...], key: str) -> None:

@@ -18,10 +18,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def as_double_array(col: Column) -> Column:
-    return col.cast("array<double>")
-
-
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
                        F.lit(0.0), lambda acc, v: acc + v)

@@ -737,8 +737,8 @@ def fold_accepted_into_state(spark, prefix: str, kept_docs: DataFrame,
     # sig/postings first, digests LAST, for two reasons: (1) the digest
     # append would otherwise race the `new` anti-join's scan of the very
     # table it appends to (stage_local materializes `new` at the first
-    # write, but ordering keeps the invariant true even under the
-    # lineage lifecycle mode); (2) the crash window between appends then
+    # write; the ordering keeps the invariant from resting on that
+    # alone); (2) the crash window between appends then
     # fails CONSERVATIVE — a replay after a crash mid-fold re-appends
     # sig/posting rows (duplicates are absorbed by the classifier's
     # distinct()s; the hot-shingle cap binds slightly early) instead of
@@ -1595,8 +1595,7 @@ def minhash_calibration(docs: DataFrame, text_col: str = "text",
 
 def blocklist_filter(docs: DataFrame, blocklist: DataFrame,
                      text_col: str = "text", id_col: str = "doc_id",
-                     digest_col: str = "digest",
-                     broadcast_blocklist: bool = True) -> DataFrame:
+                     digest_col: str = "digest") -> DataFrame:
     """Opt-out / takedown compliance filter: drop every document whose
     CONTENT digest appears on a blocklist — the removal stage a corpus
     operator runs for rights-holder opt-outs and takedown requests
@@ -1612,15 +1611,12 @@ def blocklist_filter(docs: DataFrame, blocklist: DataFrame,
 
     Shape: one narrow md5 projection + LEFT ANTI join against the
     digest list. A takedown list is small by construction (requests,
-    not corpora) so it broadcasts — the corpus is never shuffled;
-    ``broadcast_blocklist=False`` drops the hint for the rare
-    million-entry list, degrading to a digest-keyed shuffle anti-join
-    (16-byte keys, the exact-dedup shuffle shape). The filtered corpus
-    keeps the input schema plus ``_digest`` for downstream audit.
+    not corpora) so it broadcasts — the corpus is never shuffled. The
+    filtered corpus keeps the input schema plus ``_digest`` for
+    downstream audit.
     """
-    bl = blocklist.select(F.col(digest_col).alias("_digest")).distinct()
-    if broadcast_blocklist:
-        bl = F.broadcast(bl)
+    bl = F.broadcast(
+        blocklist.select(F.col(digest_col).alias("_digest")).distinct())
     d = docs.withColumn("_digest", F.md5(F.col(text_col)))
     return d.join(bl, "_digest", "left_anti")
 
@@ -1652,11 +1648,9 @@ def retroactive_takedown(spark, corpus_path: str, blocklist: DataFrame,
     * self-overwrite: the survivors are computed FROM the path being
       overwritten, so the pruned frame goes through
       ``lifecycle.stage_pinned`` — an EAGER, lineage-severed
-      localCheckpoint in every lifecycle mode — before the write
-      starts: the write's plan is a LogicalRDD over executor-local
-      blocks with no file-scan lineage, so nothing (not even a
-      cached-block loss under ``SPARK_GRAFT_LIFECYCLE=lineage``) can
-      re-read the files being replaced mid-overwrite;
+      localCheckpoint — before the write starts: the write's plan is a
+      LogicalRDD over executor-local blocks with no file-scan lineage,
+      so nothing can re-read the files being replaced mid-overwrite;
     * fully-emptied partitions: dynamic partition overwrite only
       replaces partitions PRESENT in the written data, so a partition
       whose every row is removed would silently keep its old files.

@@ -26,14 +26,11 @@ before the caller's own action even starts (the round-6 judge measured
     storage beyond GC latency, without the operator guessing when its
     caller is done consuming.
 
-Fault-tolerance trade (flagged by the round-6 advisor): ``localCheckpoint``
-severs lineage onto executor-local storage — after an executor loss the
-frame is NOT recomputable and the job fails, which is acceptable for
-bounded analytics jobs but wrong for long-running cluster deployments that
-rely on lineage-based recovery. ``SPARK_GRAFT_LIFECYCLE=lineage`` switches
-every call site to a plain lazy ``persist(MEMORY_AND_DISK)`` that keeps
-full lineage (at the cost of CacheManager entries living until the session
-or an operator-level release drops them).
+This is the one policy, and its trade is fault tolerance: ``localCheckpoint``
+severs lineage onto executor-local storage, so after an executor loss the
+frame is NOT recomputable and the job fails instead of recovering. That
+suits bounded analytics jobs; a deployment that must survive executor loss
+reruns the failed job.
 
 Release latency (r09 measurement): "GC-released" means the JVM
 ContextCleaner drops a checkpointed RDD once ITS JVM-side reference is
@@ -51,59 +48,30 @@ invocation cadence — it exists for exactly this pattern.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
-
-#: "local" (default) = lazy localCheckpoint, GC-released, lineage severed.
-#: "lineage" = lazy persist keeping full lineage for fault-tolerant
-#: clusters; storage lives until explicitly released / session end.
-#: Default only — tests may monkeypatch it; the env var is re-read on
-#: every stage_local call so flipping SPARK_GRAFT_LIFECYCLE mid-session
-#: (the advertised escape hatch) takes effect immediately.
-LIFECYCLE_MODE = os.environ.get("SPARK_GRAFT_LIFECYCLE", "local")
-_IMPORT_DEFAULT = LIFECYCLE_MODE
-
-
-def _mode() -> str:
-    if LIFECYCLE_MODE != _IMPORT_DEFAULT:
-        return LIFECYCLE_MODE  # monkeypatched module attribute wins
-    return os.environ.get("SPARK_GRAFT_LIFECYCLE", "local")
 
 
 def stage_local(df: DataFrame) -> DataFrame:
     """Mark a multiply-consumed intermediate for one-shot materialization.
 
-    Lazy in both modes: no job runs until the caller's own action, at
-    which point the frame computes exactly once and every consumer branch
-    reads the materialized copy. See module docstring for the
-    release/fault-tolerance contract of each mode.
+    Lazy: no job runs until the caller's own action, at which point the
+    frame computes exactly once and every consumer branch reads the
+    materialized copy. See the module docstring for the release and
+    fault-tolerance contract.
     """
-    if _mode() == "lineage":
-        from pyspark import StorageLevel
-
-        return df.persist(StorageLevel.MEMORY_AND_DISK)
     return df.localCheckpoint(eager=False)
 
 
 def stage_pinned(df: DataFrame) -> DataFrame:
-    """Eager, lineage-SEVERED materialization in EVERY lifecycle mode —
-    the barrier a destructive self-overwrite requires.
+    """Eager, lineage-severed materialization: the barrier a destructive
+    self-overwrite requires.
 
-    ``stage_local`` under ``SPARK_GRAFT_LIFECYCLE=lineage`` is a lazy
-    persist that keeps full lineage: exactly the property that makes a
-    rewrite-in-place unsafe, because a cached-block loss (executor
-    failure — the very environment lineage mode is advertised for)
-    during the overwrite would recompute the frame by re-scanning the
-    files being replaced, silently corrupting the published output.
-    Before overwriting a path with data derived from that same path,
-    the frame must exist somewhere that is NOT the path — so this is an
-    eager localCheckpoint unconditionally: the job runs now, the result
-    lives in executor-local blocks, and the write's plan is a
-    LogicalRDD with no file-scan lineage at all. The fault-tolerance
-    trade inverts here: after an executor loss mid-overwrite the job
-    FAILS (and the dynamic-overwrite commit protocol leaves untouched
-    partitions intact) instead of "recovering" into corruption — for a
-    destructive rewrite, failing is the correct degraded mode in both
-    lifecycle modes."""
+    Before overwriting a path with data derived from that same path, the
+    frame must exist somewhere that is NOT the path, or a recompute during
+    the overwrite would re-scan the files being replaced. The job runs
+    now, the result lives in executor-local blocks, and the write's plan
+    is a LogicalRDD with no file-scan lineage at all. After an executor
+    loss mid-overwrite the job FAILS (and the dynamic-overwrite commit
+    protocol leaves untouched partitions intact) instead of recovering
+    into corruption."""
     return df.localCheckpoint(eager=True)

@@ -423,9 +423,9 @@ def republish_changed_shards(spark, docs: DataFrame, snap_path: str,
     # stage_pinned, not stage_local: the caller's docs frame may itself
     # read from snap_path (converging a snapshot in place is the
     # operator's advertised use), so the decision frame must be eager
-    # and lineage-severed before the dynamic overwrite — under the
-    # lineage lifecycle a lazy persist could recompute it mid-write by
-    # re-scanning the shards being replaced
+    # and lineage-severed before the dynamic overwrite — a frame that
+    # still carried its file-scan lineage could be recomputed mid-write
+    # by re-scanning the shards being replaced
     keep = tuple(c for c in docs.columns if c != id_col)
     staged = stage_pinned(
         corpus_publish_decisions(docs, blocklist, text_col, id_col,

@@ -762,7 +762,7 @@ def semantic_decontam(embeddings: DataFrame, benchmark: DataFrame,
 
 def embedding_diversity(embeddings: DataFrame, group_col: str = "label",
                         vec_col: str = "embedding", id_col: str = "vec_id",
-                        dim: int | None = None) -> DataFrame:
+                        *, dim: int) -> DataFrame:
     """Per-group embedding diversity WITHOUT a pairwise join — the corpus
     health metric (mode collapse / cluster redundancy) a training
     pipeline tracks over its embedding table.
@@ -772,15 +772,13 @@ def embedding_diversity(embeddings: DataFrame, group_col: str = "label",
     of directional statistics — public math). So the MEAN pairwise
     cosine of an n^2 pair set costs ONE elementwise-sum aggregate.
 
-    With ``dim`` given (the fast path): one wide codegen aggregate of
-    dim sum(element_at(v, i) / norm) columns + the count — NO explode
-    (the posexplode fallback forces the interpreted normalize lambda per
-    element: measured 5.8s vs 0.6s on 50k x 64 vectors); the row norm
-    folds once per row. Shuffle carries groups x (dim + 1) partial sums.
-    Without ``dim`` (unknown width) the posexplode word-count shape runs
-    instead — same math, same output.
+    ``dim`` is the vector width: one wide codegen aggregate of dim
+    sum(element_at(v, i) / norm) columns + the count — NO explode (a
+    posexplode shape forces the interpreted normalize lambda per element:
+    measured 5.8s vs 0.6s on 50k x 64 vectors); the row norm folds once
+    per row. Shuffle carries groups x (dim + 1) partial sums.
 
-    At 100 TB both replace an unthinkable n^2 self-join with a
+    At 100 TB this replaces an unthinkable n^2 self-join with a
     map-side-combined aggregate. Returns (group_col, n,
     mean_pairwise_cosine, centroid_norm) where centroid_norm = ||S||/n
     in [0, 1] (1 = all vectors identical direction); mean cosine is NULL
@@ -801,36 +799,19 @@ def embedding_diversity(embeddings: DataFrame, group_col: str = "label",
     vec = f"cast({vec_col} as array<double>)"
     nrm = (f"sqrt(aggregate(transform({vec}, y -> y * y), 0D, "
            f"(acc, x) -> acc + x))")
-    if dim is not None:
-        base = (_fan_out(embeddings)
-                .select(group_col, F.expr(vec).alias("_v"),
-                        F.expr(nrm).alias("_nrm"))
-                .where(F.col("_nrm") > 0))
-        g = base.groupBy(group_col).agg(
-            F.count(F.lit(1)).alias("n"),
-            *[F.sum(F.element_at("_v", i + 1) / F.col("_nrm"))
-              .alias(f"_s{i}") for i in range(dim)])
-        ss = None
-        for i in range(dim):
-            term = F.col(f"_s{i}") * F.col(f"_s{i}")
-            ss = term if ss is None else ss + term
-        joined = g.withColumn("_ss", ss)
-    else:
-        nonzero = embeddings.where(F.expr(nrm) > 0)
-        # nullif guard: the filter already drops zero-norm rows, but
-        # whole-stage codegen can evaluate the (common-subexpression)
-        # division while testing the predicate — under ANSI mode (Spark 4
-        # default) a bare x/0 then throws for the very rows being
-        # filtered out. NULL division is inert post-filter.
-        guarded = f"transform({vec}, x -> x / nullif({nrm}, 0D))"
-        emb = nonzero.select(group_col, F.expr(guarded).alias("nv"))
-        comp = emb.select(group_col, F.posexplode("nv").alias("pos", "v"))
-        ssq = (comp.groupBy(group_col, "pos").agg(F.sum("v").alias("sv"))
-               .groupBy(group_col)
-               .agg(F.sum(F.col("sv") * F.col("sv")).alias("_ss")))
-        cnt = nonzero.groupBy(group_col).agg(F.count(F.lit(1)).alias("n"))
-        joined = cnt.join(ssq, group_col)
-    return (joined
+    base = (_fan_out(embeddings)
+            .select(group_col, F.expr(vec).alias("_v"),
+                    F.expr(nrm).alias("_nrm"))
+            .where(F.col("_nrm") > 0))
+    g = base.groupBy(group_col).agg(
+        F.count(F.lit(1)).alias("n"),
+        *[F.sum(F.element_at("_v", i + 1) / F.col("_nrm"))
+          .alias(f"_s{i}") for i in range(dim)])
+    ss = None
+    for i in range(dim):
+        term = F.col(f"_s{i}") * F.col(f"_s{i}")
+        ss = term if ss is None else ss + term
+    return (g.withColumn("_ss", ss)
             .select(group_col, "n",
                     R.fround(F.when(F.col("n") > 1,
                                     (F.col("_ss") - nd) / (nd * (nd - 1))),

@@ -584,8 +584,6 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame,
                   ngram: int = 3,
                   bench_cache_key: tuple | None = None,
                   max_broadcast_hashes: int | None = MAX_BROADCAST_BENCH_HASHES,
-                  bloom_bits: int | None = None,
-                  bloom_k: int = 5,
                   ) -> DataFrame:
     """Benchmark decontamination: drop every training document sharing ANY
     word n-gram with the benchmark/eval set — the standard guard against
@@ -608,20 +606,11 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame,
       threshold) yields contaminated ids, and a left-anti join removes
       them. Linear in corpus shingles, shuffles bounded by the hash join
       + the id anti-join; never collects anything to the driver.
-      With ``bloom_bits`` set (a power of two; defaulted by callers that
-      opt in, e.g. 2^23 = 1 MiB), the corpus shingle stream is first
-      prefiltered against a broadcast Bloom bitmap built from the
-      benchmark hashes (functions/bloom): no false negatives, so the
-      exact join downstream sees identical matches while the shuffled
-      row set shrinks by 1 - FP-rate on the non-matching majority —
-      at 100 TB that is the difference between shuffling every corpus
-      shingle and shuffling a trickle.
 
-    All paths use the same tokenization and the same md5-prefix hash
+    Both paths use the same tokenization and the same md5-prefix hash
     (functions/hashing, Spark dialect is bit-identical to the Python
     fold), so the clean set is identical — pinned by
-    test_decontaminate_semi_join_fallback_matches_broadcast and
-    test_decontaminate_bloom_guard_matches_exact.
+    test_decontaminate_semi_join_fallback_matches_broadcast.
 
     Returns the CLEAN docs (id_col plus passthrough columns of `docs`).
     """
@@ -635,20 +624,9 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame,
     if bench_hashes is None:
         # fallback: benchmark too large for a literal — distributed
         # semi-join on the shingle hash, same tokenization/hash pipeline
-        from kafka_connect_oss_spark.operators.lifecycle import stage_local
-
         bench_h = shingle_hash_pairs(
             benchmark, text_col, ngram, id_col,
             distinct=False).select("_h").distinct()
-        if bloom_bits:
-            from kafka_connect_oss_spark.functions import bloom as B
-
-            # bench_h feeds both the bitmap build and the verify join —
-            # stage it once instead of re-running the benchmark explode
-            bench_h = stage_local(bench_h)
-            filt = B.bloom_build(bench_h, "_h", bloom_bits, bloom_k)
-            doc_h = B.bloom_prefilter(doc_h, "_h", filt, bloom_bits,
-                                      bloom_k)
         contaminated = doc_h.join(bench_h, "_h").select(id_col).distinct()
         return docs.join(contaminated, id_col, "left_anti")
     if not bench_hashes:

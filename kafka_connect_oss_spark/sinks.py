@@ -31,8 +31,9 @@ chain. OSS goes through its S3 API,
 ``s3://<bucket>/<prefix>?endpoint_override=oss-<region>.aliyuncs.com``;
 ``oss://`` has no ``pyarrow.fs`` scheme and fails before any job runs. On
 object stores a move is a server-side copy plus a delete. Spark's readers
-get the Hadoop form of the same URL (``_spark_url``: ``s3a://``, no query),
-configured through ``fs.s3a.*`` in ``PipelineConfig.extra_spark_conf``.
+get the Hadoop form of the same URL (``_spark_url``: ``s3a://``, no query);
+the endpoint and credentials for those reads go on the Spark session as
+``spark.hadoop.fs.s3a.*`` settings.
 """
 
 from __future__ import annotations
@@ -265,6 +266,10 @@ def compact_committed(spark: SparkSession, out_url: str, cfg: PipelineConfig,
     100 TB layout stays scannable. The rewrite reuses commit_batch, so
     compacted files follow the same key scheme (topic+partition+startOffset)
     and the pass is idempotent — rerunning it rewrites identical bytes.
+    It is also crash-safe: a crash between the rewrite and the stale-object
+    deletes leaves both generations on disk, so the rerun reads some
+    records twice; it drops duplicate ``(topic, partition, offset)`` rows
+    before it commits, and so still writes each record once.
     Readers see partition dirs atomically per-file; run it when the
     partition is no longer being appended (past partitions under time-based
     layouts).
@@ -276,7 +281,8 @@ def compact_committed(spark: SparkSession, out_url: str, cfg: PipelineConfig,
 
     import pyarrow.fs as pafs
 
-    existing = read_committed(spark, out_url, cfg, topic)
+    existing = read_committed(spark, out_url, cfg, topic).dropDuplicates(
+        ["topic", "partition", "offset"])
     big_cfg = replace(cfg, flush_size=target_records_per_file)
     # rewrite under the same url: deterministic keys mean overlapping names
     # are overwritten in place (S5), then stale small files are removed

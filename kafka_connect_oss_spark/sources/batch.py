@@ -88,15 +88,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return normalize_timestamps(df)
 
 
-def sink_records(spark: SparkSession, sf_dir: str, topic: str = "events") -> DataFrame:
-    """events -> SinkRecord envelope (FIXTURES.md F-1).
+def envelope(ev: DataFrame, topic: str) -> DataFrame:
+    """events rows -> SinkRecord envelope (FIXTURES.md F-1), batch or
+    streaming.
 
     ``partition``: synthetic Kafka partition = event_id % N (deterministic,
     mirrors a keyless round-robin producer). ``offset``: monotonic per
     partition = event_id div N (offsets are per-TopicPartition monotonic in
     Kafka; integer division of a round-robin id gives exactly that).
     """
-    ev = load_table(spark, sf_dir, "events")
     return ev.select(
         F.lit(topic).alias("topic"),
         (F.col("event_id") % N_KAFKA_PARTITIONS).cast("int").alias("partition"),
@@ -109,6 +109,11 @@ def sink_records(spark: SparkSession, sf_dir: str, topic: str = "events") -> Dat
         F.col("value"),
         F.col("props"),
     )
+
+
+def sink_records(spark: SparkSession, sf_dir: str, topic: str = "events") -> DataFrame:
+    """The sf_dir's events table as SinkRecords (see ``envelope``)."""
+    return envelope(load_table(spark, sf_dir, "events"), topic)
 
 
 # DuckDB rendering of the same envelope, used to build oracle SQL strings.

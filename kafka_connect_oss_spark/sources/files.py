@@ -12,8 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_connect_oss_spark.sources.batch import (N_KAFKA_PARTITIONS,
-                                                   normalize_timestamps)
+from kafka_connect_oss_spark.sources.batch import envelope, normalize_timestamps
 
 
 def events_file_stream(spark: SparkSession, sf_dir: str,
@@ -39,13 +38,4 @@ def events_file_stream(spark: SparkSession, sf_dir: str,
     # envelope guarantees TIMESTAMP (naive-UTC semantics, session TZ pinned
     # UTC by the pipeline) just like the batch envelope.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = normalize_timestamps(ev)
-    return ev.select(
-        F.lit(topic).alias("topic"),
-        (F.col("event_id") % N_KAFKA_PARTITIONS).cast("int").alias("partition"),
-        F.floor(F.col("event_id") / N_KAFKA_PARTITIONS).cast("bigint").alias("offset"),
-        F.col("ts"),
-        F.col("user_id").cast("string").alias("key"),
-        F.col("event_id"), F.col("user_id"), F.col("event_type"),
-        F.col("value"), F.col("props"),
-    )
+    return envelope(normalize_timestamps(ev), topic)

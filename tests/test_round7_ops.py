@@ -36,13 +36,12 @@ def test_embedding_diversity_excludes_zero_norm(spark):
          (3, "a", [0.0, 0.0]),  # zero-norm: no direction, must not count
          (4, "b", [0.0, 0.0])],  # all-zero group: no row
         "vec_id int, label string, embedding array<double>")
-    for dim in (2, None):  # wide-agg fast path AND posexplode fallback
-        out = {r.label: r for r in
-               similarity.embedding_diversity(
-                   df, dim=dim, group_col="label").collect()}
-        assert out["a"].n == 2
-        assert out["a"].mean_pairwise_cosine == pytest.approx(1.0)
-        assert "b" not in out
+    out = {r.label: r for r in
+           similarity.embedding_diversity(
+               df, dim=2, group_col="label").collect()}
+    assert out["a"].n == 2
+    assert out["a"].mean_pairwise_cosine == pytest.approx(1.0)
+    assert "b" not in out
 
 
 def test_weighted_sample_ranks_by_unrounded_key(spark):
@@ -153,18 +152,6 @@ def test_incremental_dedup_from_compacted_tables(spark, sf_dir,
         assert "SelectedBucketsCount" in plan
     finally:
         spark.sql("DROP DATABASE dedupstate CASCADE")
-
-
-def test_lifecycle_lineage_mode_round_trips(spark, sf_dir, monkeypatch):
-    """SPARK_GRAFT_LIFECYCLE=lineage keeps results identical (quantile +
-    novelty both route through stage_local)."""
-    from kafka_connect_oss_spark.operators import lifecycle
-
-    docs = load_table(spark, sf_dir, "documents").limit(200)
-    before = sorted(map(tuple, TX.novelty_score(docs).collect()))
-    monkeypatch.setattr(lifecycle, "LIFECYCLE_MODE", "lineage")
-    after = sorted(map(tuple, TX.novelty_score(docs).collect()))
-    assert before == after
 
 
 def test_exact_quantile_still_exact_after_lazy_rewrite(spark):

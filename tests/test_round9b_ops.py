@@ -233,10 +233,7 @@ def test_blocklist_empty_list_keeps_everything(spark):
     docs = _docs(spark, [(1, "a"), (2, "b")])
     bl = spark.createDataFrame([], "digest string")
     kept = dedup.blocklist_filter(docs, bl)
-    assert kept.count() == 2
-    # shuffle-anti-join fallback path gives identical results
-    kept2 = dedup.blocklist_filter(docs, bl, broadcast_blocklist=False)
-    assert sorted(r.doc_id for r in kept2.collect()) == [1, 2]
+    assert sorted(r.doc_id for r in kept.collect()) == [1, 2]
 
 
 def test_blocklist_broadcast_and_shuffle_paths_agree(spark):
@@ -246,11 +243,10 @@ def test_blocklist_broadcast_and_shuffle_paths_agree(spark):
     docs = _docs(spark, rows)
     bl = (docs.where(F.col("doc_id").isin(0, 1))
           .select(F.md5("text").alias("digest")))
-    a = sorted(r.doc_id for r in
-               dedup.blocklist_filter(docs, bl).collect())
-    b = sorted(r.doc_id for r in
-               dedup.blocklist_filter(docs, bl,
-                                      broadcast_blocklist=False).collect())
-    assert a == b
+    kept = dedup.blocklist_filter(docs, bl)
+    # the list broadcasts: the corpus side is never shuffled
+    plan = kept._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan
+    a = sorted(r.doc_id for r in kept.collect())
     # ids congruent to 0 or 1 mod 5 share content with a blocked doc
     assert a == [i for i in range(40) if i % 5 not in (0, 1)]

@@ -131,6 +131,38 @@ def test_compaction_merges_small_files(spark, records, tmp_path):
     assert again == new_keys
 
 
+def test_compaction_rerun_after_crash_before_deletes(spark, records, tmp_path,
+                                                    monkeypatch):
+    # a crash between the compacted commit and the stale-object deletes
+    # leaves the new objects next to the old small ones; the rerun reads
+    # both and must still commit every record exactly once
+    from kafka_connect_oss_spark import sinks
+
+    cfg = PipelineConfig(url=str(tmp_path), format="parquet", flush_size=50)
+    commit_batch(records, _default_enc(), cfg)
+    pooled = sinks._pooled
+
+    def crash_on_delete(fn, items):
+        if getattr(fn, "__name__", "") == "delete_file":
+            raise OSError("injected crash before the stale-object deletes")
+        pooled(fn, items)
+
+    monkeypatch.setattr(sinks, "_pooled", crash_on_delete)
+    with pytest.raises(OSError, match="injected crash"):
+        sinks.compact_committed(spark, str(tmp_path), cfg,
+                                target_records_per_file=10_000)
+    monkeypatch.setattr(sinks, "_pooled", pooled)
+    keys = sinks.compact_committed(spark, str(tmp_path), cfg,
+                                   target_records_per_file=10_000)
+
+    n = records.count()
+    back = read_committed(spark, str(tmp_path), cfg)
+    assert back.count() == n
+    assert back.select("partition", "offset").distinct().count() == n
+    assert sorted(os.path.relpath(p, tmp_path) for p in glob.glob(
+        str(tmp_path / "topics/*/*/*"))) == sorted(keys)
+
+
 def test_parquet_json_path_e4(spark, tmp_path):
     # E4: JSON payloads + registry StructType -> typed parquet (the
     # protobuf-class registry analog, ParquetJsonRecordWriterProvider.java)

@@ -361,17 +361,14 @@ def test_retroactive_takedown_join_pruning_path(spark, sf_dir, tmp_path,
 
 
 def test_retroactive_takedown_lineage_mode_severs_before_overwrite(
-        spark, sf_dir, tmp_path, monkeypatch):
-    """The r09 ADVICE medium: under SPARK_GRAFT_LIFECYCLE=lineage,
-    stage_local keeps full lineage, so a self-overwrite could recompute
-    survivors from the files being replaced. retroactive_takedown now
-    routes through stage_pinned (eager localCheckpoint in EVERY mode);
-    pin (a) stage_pinned's contract — the staged plan is a LogicalRDD
-    with no file relation even in lineage mode — and (b) the takedown
-    end-to-end under lineage mode."""
+        spark, sf_dir, tmp_path):
+    """A self-overwrite must not recompute survivors from the files
+    being replaced, so retroactive_takedown routes through stage_pinned
+    (an eager localCheckpoint). Pin (a) stage_pinned's contract — the
+    staged plan is a LogicalRDD with no file relation — and (b) the
+    takedown end to end."""
     from kafka_connect_oss_spark.operators import lifecycle as LC
 
-    monkeypatch.setattr(LC, "LIFECYCLE_MODE", "lineage")
     docs = load_table(spark, sf_dir, "documents").limit(40)
     out = tmp_path / "corpus"
     (docs.withColumn("batch_id", (F.col("doc_id") % 4).cast("int"))
@@ -382,7 +379,7 @@ def test_retroactive_takedown_lineage_mode_severs_before_overwrite(
     logical = staged._jdf.queryExecution().logical().toString()
     assert "LogicalRDD" in logical and "Relation" not in logical
 
-    # (b) end-to-end correctness with lineage mode active
+    # (b) end-to-end correctness
     victims = [r[0] for r in docs.limit(5).select("doc_id").collect()]
     bl = _bl_df(spark, _digests_of(docs, victims))
     receipt = retroactive_takedown(spark, str(out), bl)
