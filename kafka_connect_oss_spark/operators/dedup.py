@@ -24,11 +24,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from kafka_connect_oss_spark.functions import hashing as H
 from kafka_connect_oss_spark.functions import rounding as R
 from kafka_connect_oss_spark.functions import vectors as V
 from kafka_connect_oss_spark.operators.lifecycle import stage_local
+from kafka_connect_oss_spark.sources.batch import local_frame
 
 N_MINHASH = len(H.MINHASH_COEFFS)  # 8
 #: bands of 2 over the 8-slot signature. Candidate recall follows the LSH
@@ -1688,8 +1690,8 @@ def retroactive_takedown(spark, corpus_path: str, blocklist: DataFrame,
         # on the partition value (dynamic rather than static pruning;
         # one pass either way, the plan just stops being quadratic to
         # analyze)
-        av = d.sparkSession.createDataFrame(
-            [(a,) for a in affected], [partition_col])
+        av = local_frame(d.sparkSession, [(a,) for a in affected],
+                         T.StructType([d.schema[partition_col]]))
         sel = d.join(F.broadcast(av), partition_col, "semi")
     # the overwrite barrier: eager + lineage-severed in every mode
     pruned = stage_pinned(sel)

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from kafka_connect_oss_spark.functions import rounding as R
 from kafka_connect_oss_spark.functions import vectors as V
+from kafka_connect_oss_spark.sources.batch import local_frame
 
 
 def with_normalized(embeddings: DataFrame, vec_col: str = "embedding",
@@ -395,7 +396,8 @@ def kmeans_centroids(embeddings: DataFrame, n_centroids: int = 16,
         if moved <= tol:
             break
 
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(ci + 1, [float(x) for x in cents[ci]])
          for ci in range(n_centroids)],
         "cid int, cv array<double>")

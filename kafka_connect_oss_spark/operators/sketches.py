@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kafka_connect_oss_spark.functions import hashing as H
+from kafka_connect_oss_spark.sources.batch import local_frame
 
 KMV_K = 64
 HASH_SPACE = float(1 << 60)  # base_hash range (60-bit md5 fold)
@@ -165,7 +166,8 @@ def exact_quantile_disc(df: DataFrame, value_col: str, p: float,
                 .cast("int"))
 
     spark = df.sparkSession
-    mmx = spark.createDataFrame(
+    mmx = local_frame(
+        spark,
         [(g, float(mn), float(mx)) for g, (mn, mx, _) in stats.items()],
         T.StructType([T.StructField("_g", gtype),
                       T.StructField("_mn", T.DoubleType()),
@@ -195,8 +197,8 @@ def exact_quantile_disc(df: DataFrame, value_col: str, p: float,
                 routes.append((g, b, k - cum))
                 break
             cum += c
-    rdf = spark.createDataFrame(
-        routes,
+    rdf = local_frame(
+        spark, routes,
         T.StructType([T.StructField("_rg", gtype),
                       T.StructField("_rbin", T.IntegerType()),
                       T.StructField("_rank", T.LongType())]))

@@ -20,7 +20,7 @@ from kafka_connect_oss_spark.operators import sketches as SK
 from kafka_connect_oss_spark.operators import text as TXT
 from kafka_connect_oss_spark.operators import validation as VAL
 from kafka_connect_oss_spark.registry import LAZY_ORACLES, register
-from kafka_connect_oss_spark.sources.batch import load_table
+from kafka_connect_oss_spark.sources.batch import load_table, local_frame
 
 # thresholds chosen to yield non-empty results on the synthetic corpus
 # (small shared vocabulary => modest jaccard/cosine between random docs);
@@ -1391,8 +1391,8 @@ def sim_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     hits = (tagged.join(exact, "vec_id")
             .groupBy("method").agg(F.count(F.lit(1)).cast("long")
                                    .alias("n_hits")))
-    names = emb.sparkSession.createDataFrame(
-        [(m,) for m in methods], "method string")
+    names = local_frame(emb.sparkSession, [(m,) for m in methods],
+                        "method string")
     return (names.join(hits, "method", "left")
             .select("method",
                     F.coalesce("n_hits", F.lit(0)).cast("long")

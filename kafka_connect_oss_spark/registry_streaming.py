@@ -26,7 +26,7 @@ from kafka_connect_oss_spark.operators import drift as DRIFT
 from kafka_connect_oss_spark.operators import sketches as SK
 from kafka_connect_oss_spark.operators import text as TXT
 from kafka_connect_oss_spark.registry import register
-from kafka_connect_oss_spark.sources.batch import load_table
+from kafka_connect_oss_spark.sources.batch import load_table, local_frame
 from kafka_connect_oss_spark.streaming.replay import (
     ephemeral_out_dir as _ephemeral_out_dir,
     replay_chunks as _replay_chunks,
@@ -80,7 +80,7 @@ def stream_cms_batch_equivalence(spark: SparkSession,
         # the stream sink is torn down with workdir after collection;
         # materialize before cleanup
         rows = merged.orderBy("j", "bucket").collect()
-        return spark.createDataFrame(rows, merged.schema)
+        return local_frame(spark, rows, merged.schema)
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
 
@@ -147,7 +147,8 @@ def stream_asof_batch_equivalence(spark: SparkSession,
         stats = ev.agg(
             F.max("ts").alias("maxts"),
             F.expr("percentile_approx(ts, 0.5)").alias("cut")).collect()[0]
-        sent = spark.createDataFrame(
+        sent = local_frame(
+            spark,
             [(-1, stats["maxts"] + datetime.timedelta(hours=1), -1, 0)],
             "user_id long, ts timestamp, event_id long, side int")
         # the sentinel's ts is past the cut, so it rides in c2; an
@@ -484,7 +485,8 @@ def stream_sessionize_batch_equivalence(spark: SparkSession,
         ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
         # one prep collect: the cut search carries maxts with it
         cut, maxts = _session_cut_ts(ev)
-        sent = spark.createDataFrame(
+        sent = local_frame(
+            spark,
             [(A.SESSION_FLUSH_USER,
               A.session_flush_ts(maxts, gap_ms=_SESS_GAP_MS,
                                  watermark_delay_ms=_SESS_WATERMARK_MS))],
@@ -567,7 +569,8 @@ def stream_windowed_topk_batch_equivalence(spark: SparkSession,
         # gap = the window length and delay = the stream's watermark, so
         # the sentinel lands at maxts + window + watermark + margin —
         # past every real window's close threshold by construction
-        sent = spark.createDataFrame(
+        sent = local_frame(
+            spark,
             [(A.session_flush_ts(maxts, gap_ms=_TOPK_WINDOW_MS,
                                  watermark_delay_ms=_TOPK_WATERMARK_MS),
               "sentinel", -1)],

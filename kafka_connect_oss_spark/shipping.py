@@ -23,13 +23,27 @@ st_mtime_ns)`` has not moved since its directory was read keeps that
 directory, so each later task on the worker pays one ``stat`` per importer.
 The first task still pays the full re-read, because the package is imported
 only when that task's UDF is unpickled. CPython 3.13 made the invalidation
-lazy itself, so there, and in any process that is not a PySpark Python
-worker, nothing is installed.
+lazy itself, so there the cache is not installed.
+
+A reused worker also runs a full ``gc.collect()`` after every task
+(``pyspark/daemon.py``, worker-reuse loop). Once pandas, pyarrow and
+pyspark are imported, that walk covers ~73k objects: 16-19 ms CPU per
+task, and 35-40 ms of worker CPU from one trivial ``mapInPandas`` task to
+the next (4-vCPU box, CPython 3.11). ``install_on_python_worker`` also
+imports pandas and pyarrow, collects once and calls ``gc.freeze()``, on
+every CPython version, so later collections scan only what tasks made:
+0.15 ms per collection, ~8.5 ms from task to task. The trade: an object
+that is alive at the freeze and becomes cyclic garbage later stays until
+the worker exits (reference counting still frees the rest), and a worker
+that only runs Arrow UDFs imports pandas once, ~0.18 CPU-s. In any
+process that is not a PySpark Python worker nothing is installed, and
+there is no option to set.
 """
 
 from __future__ import annotations
 
 import atexit
+import gc
 import os
 import sys
 import tempfile
@@ -144,15 +158,31 @@ def install_zip_directory_cache() -> bool:
     return True
 
 
-def install_on_python_worker() -> bool:
-    """Install the zip-directory cache in a PySpark Python worker running
-    CPython < 3.13; anywhere else do nothing and return False."""
-    if sys.version_info >= (3, 13):
+def _freeze_heap() -> bool:
+    """Collect once, then move every object now alive into the permanent
+    generation, which no later collection scans. False if already frozen."""
+    if gc.get_freeze_count():
         return False
+    # the package is imported while a task's UDF is unpickled, before the
+    # task's first batch imports pandas and pyarrow; import them here so
+    # that their modules are frozen too
+    import pandas  # noqa: F401
+    import pyarrow  # noqa: F401
+
+    gc.collect()
+    gc.freeze()
+    return True
+
+
+def install_on_python_worker() -> bool:
+    """In a PySpark Python worker, install the zip-directory cache (CPython
+    < 3.13 only), then freeze the heap; anywhere else do nothing. Returns
+    True when anything was installed."""
     # a worker imports pyspark.core.files and flags itself before any
     # task code runs; checking sys.modules keeps pyspark out of a plain
     # `import kafka_connect_oss_spark`
     files = sys.modules.get("pyspark.core.files")
     if files is None or not files.SparkFiles._is_running_on_worker:
         return False
-    return install_zip_directory_cache()
+    shim = sys.version_info < (3, 13) and install_zip_directory_cache()
+    return _freeze_heap() or shim

@@ -23,7 +23,11 @@ A commit has two phases:
 The encoders are deterministic, so a replayed batch rewrites the same keys
 with byte-identical objects in every format, also after a restart (S5;
 TestDataWriterAvro.java:226-247). A commit deletes its staging dir even
-when it raises.
+when it raises. One case escapes that: when a job fails, a phase-1 task
+of it may still be writing while the driver deletes the dir. That task
+can then leave a temp or staged file under ``_staging/<uuid>``, and
+nothing removes it; the final keys are not touched. This case has no
+test, because local mode runs no second task attempt.
 
 Writes take a local path, ``file://`` or any ``pyarrow.fs`` URI (``s3://``,
 ``gs://``, ``hdfs://``), with credentials from its query or the AWS default

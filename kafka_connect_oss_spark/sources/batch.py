@@ -12,6 +12,8 @@ All derivations are narrow (per-row) column expressions — no shuffle; at
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -86,6 +88,29 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if f_.name in _NANO_TS_COLUMNS and f_.dataType.simpleString() == "bigint":
             df = df.withColumn(f_.name, F.expr(f"timestamp_micros({f_.name} div 1000)"))
     return normalize_timestamps(df)
+
+
+def local_frame(spark: SparkSession, rows: Iterable,
+                schema: T.StructType | str) -> DataFrame:
+    """A frame over rows held by the driver, planned as a ``LocalTableScan``.
+
+    ``spark.createDataFrame(<list>)`` parallelizes the rows as a Python RDD
+    (``Scan ExistingRDD``), so every job that reads them runs Python tasks.
+    Here the rows go through the schema's ``toInternal``, the conversion
+    that path applies (a naive datetime keeps its meaning), into one
+    ``pyarrow.Table``, which PySpark hands to the JVM whole whether or not
+    ``spark.sql.execution.arrow.pyspark.enabled`` is set.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*map(schema.toInternal, rows))) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow)
+    return spark.createDataFrame(table, schema)
 
 
 def envelope(ev: DataFrame, topic: str) -> DataFrame:

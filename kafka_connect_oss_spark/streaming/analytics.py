@@ -37,6 +37,7 @@ from __future__ import annotations
 
 from collections.abc import Iterable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -133,12 +134,12 @@ _ASOF_STATE = StructType([
 ])
 
 
-def _pack(xs: list[int]) -> str:
-    return ",".join(map(str, xs))
+def _pack(xs: np.ndarray) -> str:
+    return ",".join(map(str, xs.tolist()))
 
 
-def _unpack(s: str) -> list[int]:
-    return [int(x) for x in s.split(",")] if s else []
+def _unpack(s: str) -> np.ndarray:
+    return np.array(s.split(",") if s else [], dtype=np.int64)
 
 
 def _asof_func():
@@ -146,68 +147,69 @@ def _asof_func():
            state: GroupState) -> Iterator[pd.DataFrame]:
         (k,) = key
         if state.exists:
-            lts, lid, rts, rid = (list(_unpack(v)) for v in state.get)
+            lts, lid, rts, rid = (_unpack(v) for v in state.get)
         else:
-            lts, lid, rts, rid = [], [], [], []
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                ts_us = (pdf["ts"].astype("datetime64[ns]").astype("int64")
-                         // 1000)
-                for t, side, i in zip(ts_us, pdf["side"], pdf["id"]):
-                    if side == 1:
-                        lts.append(int(t)); lid.append(int(i))
-                    else:
-                        rts.append(int(t)); rid.append(int(i))
-        wm_us = state.getCurrentWatermarkMs() * 1000
+            lts = lid = rts = rid = np.empty(0, np.int64)
+        frames = [] if state.hasTimedOut else list(pdfs)
+        if frames:
+            pdf = pd.concat(frames, ignore_index=True)
+            ts_us = (pdf["ts"].astype("datetime64[ns]").astype("int64")
+                     .to_numpy() // 1000)
+            ids = pdf["id"].to_numpy(np.int64)
+            is_l = pdf["side"].to_numpy() == 1
+            lts = np.concatenate([lts, ts_us[is_l]])
+            lid = np.concatenate([lid, ids[is_l]])
+            rts = np.concatenate([rts, ts_us[~is_l]])
+            rid = np.concatenate([rid, ids[~is_l]])
+        # (ts, id) order on both sides: the last right row at or before a
+        # left row is then the one with the largest id among equal ts
+        order = np.lexsort((lid, lts))
+        lts, lid = lts[order], lid[order]
+        order = np.lexsort((rid, rts))
+        rts, rid = rts[order], rid[order]
+        wm_ms = state.getCurrentWatermarkMs()
+        wm_us = wm_ms * 1000
 
-        # emit every pending left row the watermark has passed: all right
-        # rows at or before it have arrived by the watermark contract
-        out, keep_l, keep_lid = [], [], []
-        rpairs = sorted(zip(rts, rid))
-        for t, i in sorted(zip(lts, lid)):
-            if t <= wm_us:
-                match = None
-                for rt, ri in rpairs:
-                    if rt <= t:
-                        match = (rt, ri)
-                    else:
-                        break
-                out.append((k, t, i, match))
-            else:
-                keep_l.append(t); keep_lid.append(i)
+        # emit every pending left row the watermark has passed (a prefix of
+        # the sorted rows): all right rows at or before it have arrived by
+        # the watermark contract. match counts the right rows at or before
+        # each one; behind a leading 0 slot ("no match"), it indexes the
+        # newest of them
+        n_out = int(np.searchsorted(lts, wm_us, side="right"))
+        match = np.searchsorted(rts, lts[:n_out], side="right")
+        has = match > 0
+        r_ts = np.concatenate([[0], rts])[match]
+        r_id = np.concatenate([[0], rid])[match]
 
         # prune right rows: matches for future left rows (> wm) only need
         # the newest right row <= wm (the carry) plus everything after wm
-        carry = None
-        for rt, ri in rpairs:
-            if rt <= wm_us:
-                carry = (rt, ri)
-        kept_r = ([carry] if carry else []) + \
-            [(rt, ri) for rt, ri in rpairs if rt > wm_us]
-        if keep_l or kept_r:
+        carry = max(int(np.searchsorted(rts, wm_us, side="right")) - 1, 0)
+        keep_l, keep_lid = lts[n_out:], lid[n_out:]
+        rts, rid = rts[carry:], rid[carry:]
+        if len(keep_l) or len(rts):
             state.update((_pack(keep_l), _pack(keep_lid),
-                          _pack([rt for rt, _ in kept_r]),
-                          _pack([ri for _, ri in kept_r])))
-            if keep_l:
+                          _pack(rts), _pack(rid)))
+            if len(keep_l):
                 # wake as soon as the watermark passes the oldest pending
                 # left row (must be strictly beyond the current watermark)
                 state.setTimeoutTimestamp(
-                    max(min(keep_l) // 1000 + 1,
-                        state.getCurrentWatermarkMs() + 1))
+                    max(int(keep_l[0]) // 1000 + 1, wm_ms + 1))
         else:
             state.remove()
-        if out:
+        if n_out:
             yield pd.DataFrame({
-                "key": [r[0] for r in out],
-                "l_ts": [pd.Timestamp(r[1], unit="us") for r in out],
-                "l_id": [r[2] for r in out],
-                "r_ts": [None if r[3] is None
-                         else pd.Timestamp(r[3][0], unit="us")
-                         for r in out],
-                "r_id": [None if r[3] is None else r[3][1] for r in out],
+                "key": k,
+                "l_ts": _us_to_timestamps(lts[:n_out]),
+                "l_id": lid[:n_out],
+                "r_ts": pd.Series(_us_to_timestamps(r_ts)).where(has),
+                "r_id": pd.arrays.IntegerArray(r_id, ~has),
             })
 
     return fn
+
+
+def _us_to_timestamps(us: np.ndarray) -> np.ndarray:
+    return us.astype("datetime64[us]").astype("datetime64[ns]")
 
 
 def streaming_asof_join(left: DataFrame, right: DataFrame,
@@ -227,6 +229,13 @@ def streaming_asof_join(left: DataFrame, right: DataFrame,
     processing-order-dependent. Pruning keeps just the newest right row
     at or below the watermark (the carry) plus unexpired right rows, so
     state per key is O(in-flight horizon), never the full history.
+
+    Cost per key call, with n left and m right rows (buffered plus new):
+    one numpy sort of each side, O(n log n + m log m), then one binary
+    search per emitted left row, O(n log m), for its match, and one for
+    the carry. The output columns are built from arrays, not per row.
+    The buffered rows still round-trip through the CSV-packed state
+    (``_ASOF_STATE``), which is O(n + m) Python string work per call.
 
     Rows carry (key, ts, id); enrich with full payloads by joining the
     emitted (l_id, r_id) pairs back to their tables — ids are the join
@@ -696,6 +705,7 @@ def run_ingest_with_blocklist(stream_docs: DataFrame, blocklist_path: str,
 
     from kafka_connect_oss_spark.operators.dedup import blocklist_filter
     from kafka_connect_oss_spark.operators.lifecycle import stage_local
+    from kafka_connect_oss_spark.sources.batch import local_frame
 
     def sink(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
@@ -713,9 +723,8 @@ def run_ingest_with_blocklist(stream_docs: DataFrame, blocklist_path: str,
         _overwrite_batch(kept, batch_id, out_path)
         if audit_path is not None:
             n_in, n_kept = batch.count(), kept.count()
-            row = spark.createDataFrame(
-                [(n_in, n_kept, n_in - n_kept)],
-                "n_in long, n_kept long, n_removed long")
+            row = local_frame(spark, [(n_in, n_kept, n_in - n_kept)],
+                              "n_in long, n_kept long, n_removed long")
             _overwrite_batch(row, batch_id, audit_path)
 
     return _start_batch_sink(stream_docs, checkpoint, sink)

@@ -1,11 +1,14 @@
-"""The worker-side zip-directory cache (shipping.install_on_python_worker).
+"""The worker-side set-up (shipping.install_on_python_worker): the
+zip-directory cache and the frozen import-time heap.
 
-Unit tests drive the shim on a temp zip on ``sys.path`` without Spark; the
-Spark test checks, from inside a reused Python worker, that a task's
-``importlib.invalidate_caches()`` re-reads no archive once the package is
-imported. None of them time anything.
+Unit tests drive the shim on a temp zip on ``sys.path`` without Spark, and
+the freeze on a faked worker; the Spark tests check, from inside a reused
+Python worker, that a task's ``importlib.invalidate_caches()`` re-reads no
+archive once the package is imported, and that the task runs on a frozen
+heap. None of them time anything.
 """
 
+import gc
 import importlib
 import os
 import subprocess
@@ -87,27 +90,62 @@ def test_install_twice_is_noop(eager_zipimport):
             is shipping._stat_checked_invalidate_caches)
 
 
-def test_gate_outside_worker_and_on_313(eager_zipimport, monkeypatch):
+@pytest.fixture
+def unfrozen_heap():
+    """A test process whose heap is not frozen, and is unfrozen again after
+    the test, so that the rest of the suite collects as usual."""
+    assert gc.get_freeze_count() == 0
+    yield
+    gc.unfreeze()
+
+
+def test_gate_outside_worker_and_on_313(eager_zipimport, unfrozen_heap,
+                                        monkeypatch):
     from pyspark.core.files import SparkFiles
 
     assert not SparkFiles._is_running_on_worker
     assert not shipping.install_on_python_worker()
+    assert gc.get_freeze_count() == 0
     monkeypatch.setattr(SparkFiles, "_is_running_on_worker", True)
     monkeypatch.setattr(sys, "version_info", (3, 13, 0, "final", 0))
-    assert not shipping.install_on_python_worker()
+    # on 3.13 the zip shim stays out, but the heap is still frozen: the
+    # daemon's per-task gc.collect() runs there too
+    assert shipping.install_on_python_worker()
     assert (zipimport.zipimporter.invalidate_caches
             is shipping._EAGER_INVALIDATE)
+    assert gc.get_freeze_count() > 0
 
 
 @pytest.mark.skipif(sys.version_info >= (3, 13),
                     reason="the shim targets CPython < 3.13")
-def test_gate_installs_on_worker(eager_zipimport, monkeypatch):
+def test_gate_installs_on_worker(eager_zipimport, unfrozen_heap,
+                                 monkeypatch):
     from pyspark.core.files import SparkFiles
 
     monkeypatch.setattr(SparkFiles, "_is_running_on_worker", True)
     assert shipping.install_on_python_worker()
     assert (zipimport.zipimporter.invalidate_caches
             is shipping._stat_checked_invalidate_caches)
+    assert gc.get_freeze_count() > 0
+
+
+def test_second_install_on_worker_is_noop(eager_zipimport, unfrozen_heap,
+                                          monkeypatch):
+    import pandas as pd
+    from pyspark.core.files import SparkFiles
+
+    monkeypatch.setattr(SparkFiles, "_is_running_on_worker", True)
+    assert shipping.install_on_python_worker()
+    frozen = gc.get_freeze_count()
+    # pandas was imported before the freeze, so its classes are not
+    # scanned by later collections
+    assert pd.DataFrame not in gc.get_objects()
+    garbage = [[] for _ in range(1000)]
+    assert not shipping.install_on_python_worker()
+    # frozen objects can still be freed by reference counting, so the
+    # count may drop; a second freeze would raise it by the lists above
+    assert gc.get_freeze_count() <= frozen
+    assert any(o is garbage for o in gc.get_objects())
 
 
 @pytest.mark.skipif(sys.version_info >= (3, 13),
@@ -162,6 +200,38 @@ def test_reused_worker_task_rereads_no_archive(spark):
     assert later, f"no worker ran a second task: {seen}"
     assert all(r.installed for r in seen), seen
     assert [r.reads for r in later] == [0], seen
+
+
+def test_reused_worker_task_runs_on_frozen_heap(spark):
+    """One-partition mapInPandas jobs until some worker runs a second task;
+    that task must find the import-time heap frozen, so the daemon's
+    collection after it scans only what the task itself made."""
+    shipping.ensure_package_on_executors(spark)
+
+    def probe(batches):
+        import gc
+        import os
+
+        import pandas as pd
+
+        repeat = getattr(shipping, "_probe_seen", False)
+        shipping._probe_seen = True
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"pid": [os.getpid()], "repeat": [repeat],
+                            "frozen": [gc.get_freeze_count()]})
+
+    schema = "pid long, repeat boolean, frozen long"
+    seen = []
+    for _ in range(4 * spark.sparkContext.defaultParallelism + 4):
+        row = (spark.range(1, numPartitions=1)
+               .mapInPandas(probe, schema).collect()[0])
+        seen.append(row)
+        if row.repeat:
+            break
+    later = [r for r in seen if r.repeat]
+    assert later, f"no worker ran a second task: {seen}"
+    assert all(r.frozen > 0 for r in seen), seen
 
 
 def test_package_zip_removed_at_exit():
